@@ -239,13 +239,15 @@ class SparkForecast:
         """Append the per-model metrics to a ``LineageStore`` manifest —
         the run-over-run wall-time record a long-lived pipeline keeps
         (part_id = model alias, n_out = fallback count, rollup_hash =
-        wall seconds; same columns every lineage row carries)."""
+        wall time in integer microseconds, so the row keeps the int64 type
+        every lineage row carries and can share a ``TierPipeline``'s
+        store)."""
         rows = [
             {"stage": stage, "part_id": name, "watermark": 0,
              "n_in": 0,
              "n_out": int(self.fallback_counts_[name].value)
              if name in self.fallback_counts_ else 0,
-             "rollup_hash": f"{float(acc.value):.6f}",
+             "rollup_hash": int(round(float(acc.value) * 1e6)),
              "run_id": run_id}
             for name, acc in self.forecast_times_.items()
         ]

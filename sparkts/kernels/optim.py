@@ -66,7 +66,7 @@ def nelder_mead(
         # numpy path verbatim.
         fl = f.tolist()
         np1 = len(fl)
-        nan_seen = False
+        nan_seen = fl[0] != fl[0]
         best = 0
         bv = fl[0]
         worst = 0

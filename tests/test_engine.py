@@ -183,3 +183,29 @@ def test_metrics_table_and_lineage_log(spark, panel_df, tmp_path):
     got = {r["part_id"]: r for r in store.read().collect()}
     assert got["FailingModel"]["n_out"] == n_series
     assert float(got["SeasonalNaive"]["rollup_hash"]) > 0
+
+
+def test_log_metrics_shares_tier_pipeline_store(spark, sf_dir, panel_df, tmp_path):
+    """Forecast metrics logged into a TierPipeline's own lineage store keep
+    its int64 columns: the store stays readable and the pipeline resumes."""
+    from pyspark.sql import functions as F
+
+    from sparkts.lineage import TierPipeline
+
+    activity = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+        "event_type", "ts", "value")
+    early = activity.where(F.col("ts") < "2024-01-20 00:00:00")
+    pipe = TierPipeline(spark, str(tmp_path / "tiers"), ["event_type"])
+    pipe.run(early, "ts", "value", run_id="r1")
+    eng = SparkForecast([SeasonalNaive(24)], freq="h")
+    eng.forecast(panel_df, h=4).count()
+    eng.log_metrics(pipe.lineage, stage="forecast", run_id="r1")
+
+    rows = pipe.lineage.read().collect()
+    fc = [r for r in rows if r.stage == "forecast"]
+    assert [r.part_id for r in fc] == ["SeasonalNaive"]
+    assert fc[0].rollup_hash > 0
+    assert pipe.run(early, "ts", "value", run_id="r2") == {
+        "1m": 0, "5m": 0, "1h": 0, "1d": 0}
+    res = pipe.run(activity, "ts", "value", run_id="r3")
+    assert all(n > 0 for n in res.values())

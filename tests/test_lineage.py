@@ -4,11 +4,14 @@ rerun produces identical rollup hashes (idempotency)."""
 import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from sparkts.lineage import TierPipeline
-from sparkts.operators import rollup_base
+from sparkts.lineage import LINEAGE_SCHEMA, LineageStore, TierPipeline, rollup_hash_col
+from sparkts.operators import build_tiers, rollup_base
+from sparkts.operators.rollup import TIERS
 
 
 @pytest.fixture()
@@ -116,3 +119,86 @@ def test_hash_partitioning_invariant(spark, activity, out_dir):
         (r.stage, r.part_id): r.rollup_hash for r in p2.lineage.read().collect()
     }
     assert h1 == h2
+
+
+def _day_hashes(df):
+    """{day: bit_xor rollup hash} of a tier DataFrame."""
+    rows = (df.withColumn("h", rollup_hash_col())
+            .groupBy(F.to_date("bucket").cast("string").alias("day"))
+            .agg(F.bit_xor("h").alias("hash")).collect())
+    return {r.day: int(r.hash) for r in rows}
+
+
+def _lineage_hashes(pipe, stage):
+    return {r.part_id: int(r.rollup_hash)
+            for r in pipe.lineage.read().where(F.col("stage") == stage).collect()}
+
+
+def _day_dirs(pipe, tier):
+    return sorted(d for d in os.listdir(pipe.tier_path(tier)) if d.startswith("day="))
+
+
+def test_one_day_increment(spark, activity, out_dir):
+    """Landing one day on an existing state adds exactly one partition per
+    tier, each hashing like a direct ``build_tiers`` of that day."""
+    day = "2024-01-30"
+    on_day = F.to_date("ts") == day
+    pipe = TierPipeline(spark, out_dir, ["event_type"])
+    pipe.run(activity.where(~on_day), "ts", "value", run_id="r1")
+    before = {t: _day_dirs(pipe, t) for t in TIERS}
+    res = pipe.run(activity.where(on_day), "ts", "value", run_id="r2")
+    assert res == {t: 1 for t in TIERS}
+    direct = build_tiers(activity.where(on_day), "ts", ["event_type"], "value")
+    for t in TIERS:
+        assert _day_dirs(pipe, t) == sorted(before[t] + [f"day={day}"]), t
+        got = {r.part_id: int(r.rollup_hash) for r in pipe.lineage.read()
+               .where((F.col("stage") == f"tier_{t}") & (F.col("run_id") == "r2"))
+               .collect()}
+        assert got == _day_hashes(direct[t]), t
+
+
+def test_crash_backlog_rebuilt_from_finer_tier(spark, activity, out_dir):
+    """A day whose 5m partition is committed but whose 1h partition and
+    lineage are lost is rebuilt from the written 5m tier alone: the rerun
+    gets no raw rows for that day."""
+    pipe = TierPipeline(spark, out_dir, ["event_type"])
+    pipe.run(activity, "ts", "value", run_id="r1")
+    lin = pipe.lineage.read().toPandas()
+    victim = "2024-01-10"
+    old_hash = _lineage_hashes(pipe, "tier_1h")[victim]
+    keep = lin[~((lin.stage == "tier_1h") & (lin.part_id == victim))]
+    shutil.rmtree(pipe.lineage.path)
+    pipe.lineage.append(keep.to_dict("records"))
+    shutil.rmtree(os.path.join(pipe.tier_path("1h"), f"day={victim}"))
+    assert victim in pipe.lineage.completed_parts("tier_5m")
+
+    res = pipe.run(activity.where(F.to_date("ts") != victim), "ts", "value",
+                   run_id="r2")
+    assert res == {"1m": 0, "5m": 0, "1h": 1, "1d": 0}
+    rebuilt = pipe.lineage.read().where(F.col("run_id") == "r2").collect()
+    assert [(r.stage, r.part_id) for r in rebuilt] == [("tier_1h", victim)]
+    assert int(rebuilt[0].rollup_hash) == old_hash
+    hashes = pipe.lineage.read().where("stage = 'tier_1h'").toPandas()
+    assert not hashes.part_id.duplicated().any()
+    assert len(_day_dirs(pipe, "1h")) == len(hashes)
+
+
+def test_hidden_lineage_files_ignored(spark, tmp_path):
+    """A commit's hidden temp file left by a crash is not part of the
+    manifest, for ``read()`` or for ``completed_parts()``."""
+    store = LineageStore(spark, str(tmp_path))
+    row = {"stage": "tier_1h", "part_id": "2024-01-01", "watermark": 1,
+           "n_in": 1, "n_out": 1, "rollup_hash": 7, "run_id": "r1"}
+    store.append([row])
+    pq.write_table(
+        pa.Table.from_pylist([dict(row, part_id="2099-01-01")],
+                             schema=LINEAGE_SCHEMA),
+        os.path.join(store.path, ".part-crashed.parquet.tmp"))
+    assert store.completed_parts("tier_1h") == {"2024-01-01"}
+    assert [r.part_id for r in store.read().collect()] == ["2024-01-01"]
+
+
+def test_tier_widths_divide_a_day():
+    """The day-local cascade relies on it: day D of a coarser tier is built
+    from day D of the finer tier alone."""
+    assert all(86400 % w == 0 for w in TIERS.values())

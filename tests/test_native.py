@@ -221,65 +221,67 @@ def test_ets_prepare_bit_exact():
                 assert np.array_equal(f1, f2)
 
 
+def _nm_reference(fn, x0, lower, upper, init_step=0.05, zero_pert=1e-4,
+                  alpha=1.0, gamma=2.0, rho=0.5, sigma=0.5,
+                  max_iter=1000, tol_std=1e-4, adaptive=True,
+                  tol_rel=0.0):
+    """Verbatim copy of the pre-r6 numpy Nelder-Mead loop."""
+    x0 = np.clip(np.asarray(x0, dtype=np.float64), lower, upper)
+    n = x0.size
+    if adaptive and n > 0:
+        gamma = 1.0 + 2.0 / n
+        rho = 0.75 - 1.0 / (2 * n)
+        sigma = 1.0 - 1.0 / n
+    simplex = np.tile(x0, (n + 1, 1))
+    for i in range(n):
+        v = simplex[i, i]
+        v = zero_pert if v == 0 else v * (1.0 + init_step)
+        simplex[i, i] = min(max(v, lower[i]), upper[i])
+    f = np.array([fn(simplex[i]) for i in range(n + 1)])
+
+    def clamp(x):
+        return np.clip(x, lower, upper)
+
+    for _ in range(max_iter):
+        order = np.argsort(f, kind="stable")
+        best, second_worst, worst = order[0], order[-2], order[-1]
+        if np.all(np.isfinite(f)) and np.std(f) < tol_std + tol_rel * abs(f[best]):
+            break
+        centroid = (simplex.sum(axis=0) - simplex[worst]) / n
+        xr = clamp(centroid + alpha * (centroid - simplex[worst]))
+        fr = fn(xr)
+        if f[best] <= fr < f[second_worst]:
+            simplex[worst], f[worst] = xr, fr
+            continue
+        if fr < f[best]:
+            xe = clamp(centroid + gamma * (xr - centroid))
+            fe = fn(xe)
+            if fe < fr:
+                simplex[worst], f[worst] = xe, fe
+            else:
+                simplex[worst], f[worst] = xr, fr
+            continue
+        if fr < f[worst]:
+            xc = clamp(centroid + rho * (xr - centroid))
+        else:
+            xc = clamp(centroid + rho * (simplex[worst] - centroid))
+        fc = fn(xc)
+        if fc < min(fr, f[worst]):
+            simplex[worst], f[worst] = xc, fc
+            continue
+        for i in range(n + 1):
+            if i == best:
+                continue
+            simplex[i] = clamp(simplex[best] + sigma * (simplex[i] - simplex[best]))
+            f[i] = fn(simplex[i])
+    best = int(np.argmin(f))
+    return simplex[best].copy(), float(f[best])
+
+
 def test_nelder_mead_scan_matches_argsort_semantics():
     """The r6 scan-based NM bookkeeping converges to the same point as a
     verbatim copy of the pre-r6 numpy loop on assorted objectives."""
     from sparkts.kernels.optim import nelder_mead
-
-    def nm_reference(fn, x0, lower, upper, init_step=0.05, zero_pert=1e-4,
-                     alpha=1.0, gamma=2.0, rho=0.5, sigma=0.5,
-                     max_iter=1000, tol_std=1e-4, adaptive=True,
-                     tol_rel=0.0):
-        x0 = np.clip(np.asarray(x0, dtype=np.float64), lower, upper)
-        n = x0.size
-        if adaptive and n > 0:
-            gamma = 1.0 + 2.0 / n
-            rho = 0.75 - 1.0 / (2 * n)
-            sigma = 1.0 - 1.0 / n
-        simplex = np.tile(x0, (n + 1, 1))
-        for i in range(n):
-            v = simplex[i, i]
-            v = zero_pert if v == 0 else v * (1.0 + init_step)
-            simplex[i, i] = min(max(v, lower[i]), upper[i])
-        f = np.array([fn(simplex[i]) for i in range(n + 1)])
-
-        def clamp(x):
-            return np.clip(x, lower, upper)
-
-        for _ in range(max_iter):
-            order = np.argsort(f, kind="stable")
-            best, second_worst, worst = order[0], order[-2], order[-1]
-            if np.all(np.isfinite(f)) and np.std(f) < tol_std + tol_rel * abs(f[best]):
-                break
-            centroid = (simplex.sum(axis=0) - simplex[worst]) / n
-            xr = clamp(centroid + alpha * (centroid - simplex[worst]))
-            fr = fn(xr)
-            if f[best] <= fr < f[second_worst]:
-                simplex[worst], f[worst] = xr, fr
-                continue
-            if fr < f[best]:
-                xe = clamp(centroid + gamma * (xr - centroid))
-                fe = fn(xe)
-                if fe < fr:
-                    simplex[worst], f[worst] = xe, fe
-                else:
-                    simplex[worst], f[worst] = xr, fr
-                continue
-            if fr < f[worst]:
-                xc = clamp(centroid + rho * (xr - centroid))
-            else:
-                xc = clamp(centroid + rho * (simplex[worst] - centroid))
-            fc = fn(xc)
-            if fc < min(fr, f[worst]):
-                simplex[worst], f[worst] = xc, fc
-                continue
-            for i in range(n + 1):
-                if i == best:
-                    continue
-                simplex[i] = clamp(simplex[best] + sigma * (simplex[i] - simplex[best]))
-                f[i] = fn(simplex[i])
-        best = int(np.argmin(f))
-        return simplex[best].copy(), float(f[best])
 
     rng = np.random.default_rng(11)
     for trial in range(40):
@@ -297,9 +299,35 @@ def test_nelder_mead_scan_matches_argsort_semantics():
         x0 = rng.uniform(-1, 1, n)
         lo, hi = np.full(n, -2.0), np.full(n, 2.0)
         xa, fa = nelder_mead(fn, x0, lo, hi, max_iter=200)
-        xb, fb = nm_reference(fn, x0, lo, hi, max_iter=200)
+        xb, fb = _nm_reference(fn, x0, lo, hi, max_iter=200)
         assert np.array_equal(xa, xb), trial
         assert fa == fb or (np.isinf(fa) and np.isinf(fb)), trial
+
+
+def test_nelder_mead_nan_at_first_vertex():
+    """A NaN in f[0] takes the stable-argsort fallback: the NaN vertex
+    sorts worst, so the chosen vertices match the pre-r6 loop."""
+    from sparkts.kernels.optim import nelder_mead
+
+    rng = np.random.default_rng(13)
+    for trial in range(20):
+        n = int(rng.integers(1, 6))
+        target = rng.normal(0, 0.3, n)
+
+        def fn(x):
+            if x[0] > 0.7:  # vertex 0 steps x0[0] = 0.69 to 0.7245
+                return np.nan
+            d = x - target
+            return float(d @ d)
+
+        x0 = rng.uniform(-0.5, 0.5, n)
+        x0[0] = 0.69
+        lo, hi = np.full(n, -2.0), np.full(n, 2.0)
+        xa, fa = nelder_mead(fn, x0, lo, hi, max_iter=200)
+        xb, fb = _nm_reference(fn, x0, lo, hi, max_iter=200)
+        assert np.array_equal(xa, xb), trial
+        assert fa == fb, trial
+        assert np.isfinite(fa), trial
 
 
 def test_ets_sse_bit_exact():
