@@ -9,7 +9,6 @@ Layout
 ------
 - ``sparkts.session``        SparkSession builder tuned for the engine
 - ``sparkts.datagen``        deterministic synthetic web_pages / panel corpora
-- ``sparkts.sources``        table readers (parquet now, Iceberg when available)
 - ``sparkts.operators``      rollup tiers, gap-fill, retention, compression,
                              dedup, similarity, text stats
 - ``sparkts.kernels``        per-series numpy forecast kernels (the model zoo)

@@ -494,13 +494,16 @@ int sparkts_ses_levels(const double *y, long long n, double alpha,
         const double *cpow;
         k = end - start;
         cpow = (k == 64) ? cp64 : cptail;
-        if (cpow[k - 1] == 0.0) { /* alpha == 1 edge */
-            for (j = 0; j < k; j++)
-                cinv[j] = y[start + j] / (cpow[j] == 0.0 ? 1.0 : cpow[j]);
-        } else {
-            for (j = 0; j < k; j++)
-                cinv[j] = y[start + j] / cpow[j];
+        if (cpow[k - 1] == 0.0) { /* alpha == 1 edge: c^j underflows */
+            for (j = 0; j < k; j++) {
+                l_prev = alpha * y[start + j] + c * l_prev;
+                levels[start + j] = l_prev;
+            }
+            start = end;
+            continue;
         }
+        for (j = 0; j < k; j++)
+            cinv[j] = y[start + j] / cpow[j];
         t[0] = cinv[0];
         for (j = 1; j < k; j++)
             t[j] = t[j - 1] + cinv[j];
@@ -521,11 +524,26 @@ int sparkts_ses_levels(const double *y, long long n, double alpha,
  * verified bit-equal to np.dot in tests).  This collapses ~6 numpy
  * dispatches per golden-section evaluation into one FFI call.
  */
-typedef double (*sparkts_ddot_t)(long long, const double *, long long,
-                                 const double *, long long);
-static sparkts_ddot_t sparkts_ddot = 0;
+typedef double (*sparkts_ddot64_t)(long long, const double *, long long,
+                                   const double *, long long);
+typedef double (*sparkts_ddot32_t)(int, const double *, int,
+                                   const double *, int);
+static sparkts_ddot64_t sparkts_ddot64 = 0;
+static sparkts_ddot32_t sparkts_ddot32 = 0;
 
-void sparkts_set_ddot(void *fn) { sparkts_ddot = (sparkts_ddot_t)fn; }
+/* fn is cblas_ddot64_ (64-bit integers) when ilp64, else cblas_ddot */
+void sparkts_set_ddot(void *fn, int ilp64)
+{
+    sparkts_ddot64 = ilp64 ? (sparkts_ddot64_t)fn : 0;
+    sparkts_ddot32 = ilp64 ? 0 : (sparkts_ddot32_t)fn;
+}
+
+static double sparkts_ddot(long long n, const double *x, const double *y)
+{
+    if (sparkts_ddot64)
+        return sparkts_ddot64(n, x, 1, y, 1);
+    return sparkts_ddot32((int)n, x, 1, y, 1);
+}
 
 double sparkts_ses_sse(const double *y, long long n, double alpha,
                        const double *cp64, const double *cptail,
@@ -537,7 +555,7 @@ double sparkts_ses_sse(const double *y, long long n, double alpha,
     sparkts_ses_levels(y, n, alpha, cp64, cptail, levels);
     for (t = 0; t + 1 < n; t++)
         e[t] = y[t + 1] - levels[t];
-    return sparkts_ddot(n - 1, e, 1, e, 1);
+    return sparkts_ddot(n - 1, e, e);
 }
 
 /*
@@ -563,5 +581,5 @@ double sparkts_ets_sse(const double *y, const double *f, double *e,
         for (i = 0; i < n; i++)
             e[i] = y[i] - f[i];
     }
-    return sparkts_ddot(n, e, 1, e, 1);
+    return sparkts_ddot(n, e, e);
 }

@@ -96,7 +96,7 @@ def _load():
             ctypes.c_void_p,
         ]
         lib.sparkts_set_ddot.restype = None
-        lib.sparkts_set_ddot.argtypes = [ctypes.c_void_p]
+        lib.sparkts_set_ddot.argtypes = [ctypes.c_void_p, ctypes.c_int]
         lib.sparkts_ets_sse.restype = ctypes.c_double
         lib.sparkts_ets_sse.argtypes = [
             ctypes.c_void_p, ctypes.c_void_p, ctypes.c_void_p,
@@ -140,22 +140,23 @@ def _find_ddot():
                 h = ctypes.CDLL(so)
             except OSError:
                 continue
-            for sym in ("cblas_ddot64_", "cblas_ddot"):
+            # cblas_ddot64_ takes 64-bit integers, plain cblas_ddot C ints
+            for sym, n_t in (("cblas_ddot64_", ctypes.c_longlong),
+                             ("cblas_ddot", ctypes.c_int)):
                 fn = getattr(h, sym, None)
                 if fn is not None:
                     addr = ctypes.cast(fn, ctypes.c_void_p).value
                     # confirm bit-equality with np.dot before trusting it
                     fn.restype = ctypes.c_double
-                    fn.argtypes = [ctypes.c_longlong, ctypes.c_void_p,
-                                   ctypes.c_longlong, ctypes.c_void_p,
-                                   ctypes.c_longlong]
+                    fn.argtypes = [n_t, ctypes.c_void_p, n_t,
+                                   ctypes.c_void_p, n_t]
                     rng = _np.random.default_rng(0)
                     for n in (1, 3, 7, 16, 63, 64, 200, 513):
                         e = rng.normal(0, 1, n)
                         if float(_np.dot(e, e)) != fn(
                                 n, e.ctypes.data, 1, e.ctypes.data, 1):
                             return None
-                    LIB.sparkts_set_ddot(addr)
+                    LIB.sparkts_set_ddot(addr, n_t is ctypes.c_longlong)
                     return h
     except Exception:
         return None

@@ -34,9 +34,9 @@ _EMPTY64 = np.empty(0, dtype=np.float64)
 
 def _ses_levels(y: np.ndarray, alpha: float) -> np.ndarray:
     """Level trajectory of the SES recurrence (shared core of ses_scan /
-    ses_sse). Bit-identical to the original block formula — the where()
-    guard on c^j == 0 only triggers at α == 1 (c = 0), so the common path
-    divides directly."""
+    ses_sse). A block whose c^j underflows to 0 (α == 1, c = 0) cannot be
+    divided by c^j, so it runs the recurrence step by step; every other
+    block divides directly."""
     if _native.LIB is not None and y.size > 1:
         # r6: bit-exact C body for the block formula below (pinned in
         # tests/test_native.py) — the golden-section optimizer calls this
@@ -58,9 +58,11 @@ def _ses_levels(y: np.ndarray, alpha: float) -> np.ndarray:
         end = min(start + _BLOCK, n)
         cpow = c ** _ARANGE[: end - start]                   # c^0..c^{k-1}
         if cpow[-1] == 0.0:                                  # α == 1 edge
-            cinv = y[start:end] / np.where(cpow == 0, 1.0, cpow)
-        else:
-            cinv = y[start:end] / cpow                       # y_j · c^{-j}
+            for j in range(start, end):
+                l_prev = levels[j] = alpha * y[j] + c * l_prev
+            start = end
+            continue
+        cinv = y[start:end] / cpow                           # y_j · c^{-j}
         t = np.cumsum(cinv)
         blk = (c * cpow) * l_prev + alpha * cpow * t
         levels[start:end] = blk

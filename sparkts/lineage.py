@@ -20,14 +20,29 @@ Design
   any executor count) of the same day must produce the same hash.
 * Resume protocol: the manifest is read once per run; pending days are the
   input's days filtered by ``day NOT IN completed``. Day directories on disk
-  that have NO lineage row are torn out first (a crash window leaves data
-  without lineage, never lineage without data — each tier's lineage is
-  committed right after its write).
-* Day-local cascade: every width in ``TIERS`` divides 86,400, so day D of a
-  coarser tier depends only on day D of the finer one. New days cascade
-  from the cached pending slice of the finer tier; backlog days (committed
-  in the finer tier, not yet in the coarser one) are read back from disk
-  with partition pruning. The rest of the finer history is never re-read.
+  that have NO lineage row are torn out first.
+* One aggregation, one write, one commit per run: every width in ``TIERS``
+  divides 86,400, so day D of every tier depends only on day D of the
+  finest tier. The pending finest-tier slice is exploded into one (tier,
+  bucket) slot per tier, slots of committed (tier, day)s are dropped, and a
+  single ``groupBy(tier, day, keys, bucket)`` builds every tier's pending
+  days.
+  That frame is cached, its per-(tier, day) stats are collected in one
+  action, and it is written once, partitioned by (tier, day), rows sorted
+  by (keys, bucket) and split into ceil(n_out / ``ROWS_PER_FILE``) files
+  per tier-day. All tiers' lineage rows of the run are then committed as
+  ONE manifest file.
+* Crash window: between the write and the commit, the run's days exist on
+  disk in every tier without lineage — data without lineage, never lineage
+  without data — and the next run tears them out and rebuilds them.
+* Backlog: a day committed in the finest tier but pending in a coarser one
+  (left by an interrupted per-tier commit of an older layout, or by lost
+  lineage) is read back from the finest tier on disk, with partition
+  pruning, and feeds the same aggregation. The rest of the finest history
+  is never re-read.
+* Readers see committed data only: ``read_tier`` reads the days the
+  manifest lists, with the schema stored in a committed file's footer, so
+  a read launches no schema-inference job.
 
 Iceberg note: the north star names Iceberg tables; this container has no
 Iceberg runtime jar (offline, no spark.jars.packages), so the storage layer
@@ -41,16 +56,16 @@ table's own snapshot metadata; nothing else changes.
 from __future__ import annotations
 
 import datetime
-import functools
+import json
 import os
 import shutil
 import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from sparkts.operators.rollup import STAT_COLS, TIERS, rollup_base, rollup_cascade
+from sparkts.operators.rollup import STAT_COLS, TIERS, bucket_sql, merge_aggs, rollup_base
 
 LINEAGE_SCHEMA = pa.schema([
     ("stage", pa.string()),
@@ -65,14 +80,21 @@ LINEAGE_COLS = LINEAGE_SCHEMA.names
 _LINEAGE_DDL = ("stage string, part_id string, watermark long, n_in long, "
                 "n_out long, rollup_hash long, run_id string")
 
+#: row target of one tier file: a run writes a tier-day of ``n_out`` rows as
+#: ceil(n_out / ROWS_PER_FILE) parquet files
+ROWS_PER_FILE = 2_000_000
+
+#: parquet footer key under which Spark stores a file's Spark schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
 
 def rollup_hash_col() -> F.Column:
     """Order-insensitive content hash of a tier row (stats rounded to 6dp so
     the hash is stable across plan-dependent float summation orders)."""
-    parts = [F.col("bucket").cast("long").cast("string")] + [
-        F.round(F.col(c), 6).cast("string") for c in STAT_COLS
+    parts = ["CAST(CAST(bucket AS BIGINT) AS STRING)"] + [
+        f"CAST(round({c}, 6) AS STRING)" for c in STAT_COLS
     ]
-    return F.xxhash64(F.concat_ws("|", *parts))
+    return F.expr(f"xxhash64(concat_ws('|', {', '.join(parts)}))")
 
 
 class LineageStore:
@@ -130,8 +152,12 @@ def _reconcile(out_dir: str, completed: set[str]) -> None:
             shutil.rmtree(os.path.join(out_dir, d))
 
 
+def _days_sql(days: set[str]) -> str:
+    return ", ".join(f"DATE'{datetime.date.fromisoformat(d)}'" for d in sorted(days))
+
+
 def _day_in(days: set[str]) -> F.Column:
-    return F.col("day").isin([datetime.date.fromisoformat(d) for d in sorted(days)])
+    return F.expr(f"day IN ({_days_sql(days)})")
 
 
 class TierPipeline:
@@ -142,11 +168,12 @@ class TierPipeline:
         pipe = TierPipeline(spark, out_dir, key_cols=["domain"])
         pipe.run(activity_df, ts_col="warc_ts", value_col="bytes", run_id="r1")
 
-    One pass: the finest tier is rolled up from raw, keeping only pending
-    days; each coarser tier's pending days are cascaded from the cached
-    pending slice of the tier below, plus any backlog days read back from
-    the written finer tier. A resumed run never rescans raw data for tiers
-    already built, and never re-reads finer history it does not need.
+    One run is one aggregation, one write and one manifest commit: the
+    pending slice of the finest tier (rolled up from raw, plus backlog days
+    read back from the finest tier on disk) feeds every tier at once. A
+    resumed run never rescans raw data for days already built, and never
+    re-reads finer history it does not need. ``read_tier`` returns only the
+    days committed in the manifest.
     """
 
     def __init__(self, spark: SparkSession, out_dir: str, key_cols: list[str]):
@@ -159,7 +186,23 @@ class TierPipeline:
         return os.path.join(self.out_dir, f"tier={tier}")
 
     def read_tier(self, tier: str) -> DataFrame:
-        return self.spark.read.parquet(self.tier_path(tier))
+        """The tier's committed days (``day`` partition column included)."""
+        return self._read_days(tier, self.lineage.completed_parts(f"tier_{tier}"))
+
+    def _read_days(self, tier: str, days: set[str]) -> DataFrame:
+        """``days`` of a tier, read with the schema stored in one of their
+        files' parquet footers, so Spark launches no schema-inference job."""
+        if not days:
+            raise FileNotFoundError(f"{self.tier_path(tier)}: no committed day")
+        day_dir = os.path.join(self.tier_path(tier), f"day={min(days)}")
+        part = next(f for f in sorted(os.listdir(day_dir))
+                    if f.endswith(".parquet") and not f.startswith((".", "_")))
+        meta = pq.read_schema(os.path.join(day_dir, part)).metadata
+        data = T.StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+        schema = T.StructType([T.StructField(f.name, f.dataType) for f in data]
+                              + [T.StructField("day", T.DateType())])
+        return (self.spark.read.schema(schema).parquet(self.tier_path(tier))
+                .where(_day_in(days)))
 
     # ------------------------------------------------------------------ #
     def run(
@@ -175,63 +218,66 @@ class TierPipeline:
 
         ``extra_aggs`` (sum-decomposable columns, e.g. the extraction-
         invariant counter ``{'n_bad': F.sum('bad')}``) ride the base
-        rollup and cascade through every coarser tier — round-4 fix: the
-        pipeline used to drop them, silently disabling the
-        extraction-mismatch check the north rule requires."""
+        rollup and are summed into every coarser tier."""
         tiers = sorted(tiers or list(TIERS), key=lambda t: TIERS[t])
+        finest = tiers[0]
         manifest = self.lineage.completed()
         done = {t: manifest.get(f"tier_{t}", set()) for t in tiers}
         for t in tiers:
             _reconcile(self.tier_path(t), done[t])
 
-        def pending_days(df: DataFrame, tier: str) -> DataFrame:
-            df = df.withColumn("day", F.to_date("bucket"))
-            return df.where(~_day_in(done[tier])) if done[tier] else df
+        # pending finest-tier slice: new days from raw, plus backlog days
+        # (committed in the finest tier, pending in a coarser one) from disk
+        base = rollup_base(activity, ts_col, self.key_cols, value_col, finest,
+                           extra_aggs=extra_aggs).withColumn("day", F.to_date("bucket"))
+        if done[finest]:
+            base = base.where(~_day_in(done[finest]))
+        backlog = set().union(*(done[finest] - done[t] for t in tiers[1:]))
+        if backlog:
+            base = base.unionByName(self._read_days(finest, backlog))
 
+        # every tier from that one slice: each row is exploded into its
+        # (tier, bucket) slots, slots of committed (tier, day)s are dropped
+        # (SQL strings: one py4j call each instead of one per operator)
+        slots = F.expr("inline(array({}))".format(", ".join(
+            f"struct('{t}' AS tier, {bucket_sql('bucket', TIERS[t])} AS bucket)"
+            for t in tiers)))
+        pending = F.expr(" OR ".join(
+            f"(tier = '{t}' AND day NOT IN ({_days_sql(done[t])}))" if done[t]
+            else f"tier = '{t}'"
+            for t in tiers))
         extra_cols = list(extra_aggs or {})
-        pending: dict[str, DataFrame] = {}
+        merged = (
+            base.select(*self.key_cols, "day", *STAT_COLS, *extra_cols, slots)
+            .where(pending)
+            .groupBy("tier", "day", *self.key_cols, "bucket")
+            .agg(*merge_aggs(extra_cols))
+            .cache()
+        )
         try:
-            base_df = rollup_base(activity, ts_col, self.key_cols, value_col,
-                                  tiers[0], extra_aggs=extra_aggs)
-            pending[tiers[0]] = pending_days(base_df, tiers[0]).cache()
-            for prev, cur in zip(tiers, tiers[1:]):
-                finer = pending[prev]
-                backlog = done[prev] - done[cur]
-                if backlog:
-                    finer = finer.unionByName(
-                        self.read_tier(prev).where(_day_in(backlog)))
-                casc = rollup_cascade(finer.drop("day"), self.key_cols, cur,
-                                      extra_sum_cols=extra_cols)
-                pending[cur] = pending_days(casc, cur).cache()
-
-            # every tier's per-day stats in one job
-            h = rollup_hash_col()
-            stats = functools.reduce(DataFrame.unionByName, [
-                df.withColumn("h", h)
-                .groupBy("day")
+            stats = (
+                merged.groupBy("tier", "day")
                 .agg(
                     F.count("*").alias("n_out"),
                     F.max(F.col("bucket").cast("long")).alias("wm"),
-                    F.bit_xor("h").alias("rollup_hash"),
+                    F.bit_xor(rollup_hash_col()).alias("rollup_hash"),
                     F.sum("n_rows").alias("n_in"),
                 )
-                .withColumn("tier", F.lit(t))
-                for t, df in pending.items()
-            ]).collect()
-            by_tier: dict[str, list] = {t: [] for t in tiers}
-            for r in stats:
-                by_tier[r.tier].append(r)
-
-            # finest first; each tier's lineage commits right after its write
-            for t in tiers:
-                if not by_tier[t]:
-                    continue
-                (pending[t].write.mode("append")
-                 .partitionBy("day")
-                 .parquet(self.tier_path(t)))
+                .collect()
+            )
+            if stats:
+                # each tier-day in one task, rows in (keys, bucket) order,
+                # a new file every ROWS_PER_FILE rows: ceil(n_out /
+                # ROWS_PER_FILE) files per tier-day
+                (merged.repartition(len(stats), "tier", "day")
+                 .sortWithinPartitions("tier", "day", *self.key_cols, "bucket")
+                 .write.mode("append")
+                 .option("maxRecordsPerFile", ROWS_PER_FILE)
+                 .partitionBy("tier", "day")
+                 .parquet(self.out_dir))
                 self.lineage.append([
                     {
-                        "stage": f"tier_{t}",
+                        "stage": f"tier_{r.tier}",
                         "part_id": str(r.day),
                         "watermark": int(r.wm),
                         "n_in": int(r.n_in),
@@ -239,9 +285,8 @@ class TierPipeline:
                         "rollup_hash": int(r.rollup_hash),
                         "run_id": run_id,
                     }
-                    for r in by_tier[t]
+                    for r in stats
                 ])
-            return {t: len(by_tier[t]) for t in tiers}
         finally:
-            for df in pending.values():
-                df.unpersist()
+            merged.unpersist()
+        return {t: sum(r.tier == t for r in stats) for t in tiers}

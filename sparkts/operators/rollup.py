@@ -6,8 +6,10 @@ idea is a first-class distributed operator: time-bucketed aggregation with
 *decomposable* statistics (count/sum/min/max/sumsq) so coarser tiers are
 re-aggregations of finer tiers — never of the raw data. That property is what
 makes the cascade cheap at 100 TB: raw data is scanned exactly once (for the
-1m base tier) and each subsequent tier reads only the previous tier's buckets
-(~raw_rows / bucket_width rows).
+1m base tier) and every coarser tier is built from 1m buckets, never from raw
+rows. ``build_tiers`` chains the tiers (each from the one below);
+``sparkts.lineage.TierPipeline`` derives all coarser tiers from the 1m slice
+in one aggregation. Both merge rows with the same ``merge_aggs``.
 
 Unlike the reference's "discard incomplete trailing chunk" policy
 (models.py:2277 ``trim``), partial tail buckets are KEPT and flagged via the
@@ -49,8 +51,15 @@ def bucket_ts(ts_col: str, width_s: int) -> F.Column:
     TIMESTAMP_NTZ inputs are first cast to TIMESTAMP (session tz is pinned
     to UTC in sparkts.session, so the interpretation is stable).
     """
-    epoch = F.col(ts_col).cast("timestamp").cast("long")
-    return F.timestamp_seconds((epoch - (epoch % width_s)))
+    return F.expr(bucket_sql(ts_col, width_s))
+
+
+def bucket_sql(ts_col: str, width_s: int) -> str:
+    """``bucket_ts`` as one SQL expression string. Parsed in a single call
+    into the JVM, where building the same tree operator by operator costs
+    one py4j round trip each."""
+    epoch = f"CAST(CAST({ts_col} AS TIMESTAMP) AS BIGINT)"
+    return f"timestamp_seconds({epoch} - {epoch} % {int(width_s)})"
 
 
 def rollup_base(
@@ -81,6 +90,21 @@ def rollup_base(
     return df.groupBy(*key_cols, bucket_ts(ts_col, width).alias("bucket")).agg(*aggs)
 
 
+def merge_aggs(extra_sum_cols: list[str] | None = None) -> list[F.Column]:
+    """Aggregates that merge finer tier rows into one coarser row: counts,
+    sums and sums of squares add, minima and maxima fold. ``extra_sum_cols``
+    are summed through (they must be sum-decomposable, like the extra_aggs
+    of rollup_base)."""
+    aggs = [
+        F.sum("n_rows").alias("n_rows"),
+        F.sum("v_sum").alias("v_sum"),
+        F.min("v_min").alias("v_min"),
+        F.max("v_max").alias("v_max"),
+        F.sum("v_sumsq").alias("v_sumsq"),
+    ]
+    return aggs + [F.sum(name).alias(name) for name in extra_sum_cols or []]
+
+
 def rollup_cascade(
     finer: DataFrame,
     key_cols: list[str],
@@ -89,21 +113,12 @@ def rollup_cascade(
 ) -> DataFrame:
     """Re-aggregate a finer tier into ``to_tier`` using only decomposable
     stats — the continuous-aggregate invariant (coarse == direct-from-raw is
-    tested; see tests/test_rollup.py). ``extra_sum_cols`` are summed through
-    (they must be sum-decomposable, like the extra_aggs of rollup_base)."""
+    tested; see tests/test_rollup.py), with the ``merge_aggs`` of
+    ``extra_sum_cols``."""
     width = TIERS[to_tier]
-    aggs = [
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("v_sum").alias("v_sum"),
-        F.min("v_min").alias("v_min"),
-        F.max("v_max").alias("v_max"),
-        F.sum("v_sumsq").alias("v_sumsq"),
-    ]
-    for name in extra_sum_cols or []:
-        aggs.append(F.sum(name).alias(name))
     return (
         finer.groupBy(*key_cols, bucket_ts("bucket", width).alias("bucket"))
-        .agg(*aggs)
+        .agg(*merge_aggs(extra_sum_cols))
     )
 
 

@@ -7,8 +7,9 @@ import shutil
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
+from sparkts import lineage
 from sparkts.lineage import LINEAGE_SCHEMA, LineageStore, TierPipeline, rollup_hash_col
 from sparkts.operators import build_tiers, rollup_base
 from sparkts.operators.rollup import TIERS
@@ -157,30 +158,126 @@ def test_one_day_increment(spark, activity, out_dir):
         assert got == _day_hashes(direct[t]), t
 
 
-def test_crash_backlog_rebuilt_from_finer_tier(spark, activity, out_dir):
-    """A day whose 5m partition is committed but whose 1h partition and
-    lineage are lost is rebuilt from the written 5m tier alone: the rerun
-    gets no raw rows for that day."""
+@pytest.mark.parametrize("lost", [{"1h"}, {"5m", "1h", "1d"}],
+                         ids=["1h", "5m-1h-1d"])
+def test_crash_backlog_rebuilt_from_finer_tier(spark, activity, out_dir, lost):
+    """A day whose 1m partition is committed but whose ``lost`` tier
+    partitions and lineage are gone is rebuilt from the finest tier on disk
+    alone: the rerun gets no raw rows for that day. ``{5m, 1h, 1d}`` is the
+    state an interrupted per-tier commit leaves."""
     pipe = TierPipeline(spark, out_dir, ["event_type"])
     pipe.run(activity, "ts", "value", run_id="r1")
     lin = pipe.lineage.read().toPandas()
     victim = "2024-01-10"
-    old_hash = _lineage_hashes(pipe, "tier_1h")[victim]
-    keep = lin[~((lin.stage == "tier_1h") & (lin.part_id == victim))]
+    old_hash = {t: _lineage_hashes(pipe, f"tier_{t}")[victim] for t in lost}
+    keep = lin[~(lin.stage.isin([f"tier_{t}" for t in lost])
+                 & (lin.part_id == victim))]
     shutil.rmtree(pipe.lineage.path)
     pipe.lineage.append(keep.to_dict("records"))
-    shutil.rmtree(os.path.join(pipe.tier_path("1h"), f"day={victim}"))
-    assert victim in pipe.lineage.completed_parts("tier_5m")
+    for t in lost:
+        shutil.rmtree(os.path.join(pipe.tier_path(t), f"day={victim}"))
+    for t in set(TIERS) - lost:
+        assert victim in pipe.lineage.completed_parts(f"tier_{t}")
 
     res = pipe.run(activity.where(F.to_date("ts") != victim), "ts", "value",
                    run_id="r2")
-    assert res == {"1m": 0, "5m": 0, "1h": 1, "1d": 0}
+    assert res == {t: int(t in lost) for t in TIERS}
     rebuilt = pipe.lineage.read().where(F.col("run_id") == "r2").collect()
-    assert [(r.stage, r.part_id) for r in rebuilt] == [("tier_1h", victim)]
-    assert int(rebuilt[0].rollup_hash) == old_hash
-    hashes = pipe.lineage.read().where("stage = 'tier_1h'").toPandas()
-    assert not hashes.part_id.duplicated().any()
-    assert len(_day_dirs(pipe, "1h")) == len(hashes)
+    assert (sorted((r.stage, r.part_id) for r in rebuilt)
+            == sorted((f"tier_{t}", victim) for t in lost))
+    assert {r.stage[len("tier_"):]: int(r.rollup_hash) for r in rebuilt} == old_hash
+    for t in lost:
+        hashes = pipe.lineage.read().where(F.col("stage") == f"tier_{t}").toPandas()
+        assert not hashes.part_id.duplicated().any()
+        assert len(_day_dirs(pipe, t)) == len(hashes)
+
+
+def test_crash_between_write_and_commit(spark, activity, out_dir, monkeypatch):
+    """The run's one commit point: a crash after the write and before the
+    manifest commit leaves the new day on disk in every tier, invisible to
+    readers, and the rerun rebuilds it exactly once."""
+    day = "2024-01-30"
+    on_day = F.to_date("ts") == day
+    pipe = TierPipeline(spark, out_dir, ["event_type"])
+    pipe.run(activity.where(~on_day), "ts", "value", run_id="r1")
+    committed = {t: pipe.lineage.completed_parts(f"tier_{t}") for t in TIERS}
+    before = {t: _day_dirs(pipe, t) for t in TIERS}
+
+    commit = LineageStore.append
+    calls = []
+
+    def crash_once(self, rows):
+        calls.append(len(rows))
+        if len(calls) == 1:
+            raise RuntimeError("crash before the manifest commit")
+        commit(self, rows)
+
+    monkeypatch.setattr(LineageStore, "append", crash_once)
+    with pytest.raises(RuntimeError, match="manifest commit"):
+        pipe.run(activity.where(on_day), "ts", "value", run_id="r2")
+    for t in TIERS:
+        assert f"day={day}" in _day_dirs(pipe, t), t
+        got = {str(r.day) for r in pipe.read_tier(t).select("day").distinct().collect()}
+        assert got == committed[t], t
+
+    res = pipe.run(activity.where(on_day), "ts", "value", run_id="r3")
+    assert res == {t: 1 for t in TIERS}
+    assert calls == [len(TIERS), len(TIERS)]
+    clean = TierPipeline(spark, out_dir + "_clean", ["event_type"])
+    clean.run(activity, "ts", "value", run_id="c")
+    for t in TIERS:
+        assert (_lineage_hashes(pipe, f"tier_{t}")
+                == _lineage_hashes(clean, f"tier_{t}")), t
+        assert _day_dirs(pipe, t) == sorted(before[t] + [f"day={day}"]), t
+    lin = pipe.lineage.read().toPandas()
+    assert not lin.duplicated(["stage", "part_id"]).any()
+
+
+def _part_files(pipe, tier, day):
+    d = os.path.join(pipe.tier_path(tier), f"day={day}")
+    return sorted(os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet"))
+
+
+def _assert_layout(pipe, run_id):
+    """Each tier-day of ``run_id`` is ceil(n_out / ROWS_PER_FILE) files of
+    rows sorted by (keys, bucket); returns the largest file count."""
+    most = 0
+    for r in pipe.lineage.read().where(F.col("run_id") == run_id).collect():
+        files = _part_files(pipe, r.stage[len("tier_"):], r.part_id)
+        assert len(files) == -(-r.n_out // lineage.ROWS_PER_FILE), (r.stage, r.part_id)
+        for f in files:
+            tbl = pq.read_table(f, columns=["event_type", "bucket"])
+            assert len(tbl) <= lineage.ROWS_PER_FILE
+            order = [("event_type", "ascending"), ("bucket", "ascending")]
+            assert tbl.sort_by(order).equals(tbl), f
+        most = max(most, len(files))
+    return most
+
+
+def test_tier_file_layout_and_read_schema(spark, activity, out_dir, monkeypatch):
+    """Tier-days are written as sorted files sized by ``ROWS_PER_FILE``; a
+    smaller target splits a day without changing its hash; ``read_tier``'s
+    footer schema is the schema Spark infers."""
+    flagged = activity.withColumn("bad", (F.col("value") < 0).cast("long"))
+    bad = {"n_bad": F.sum("bad")}
+    pipe = TierPipeline(spark, out_dir, ["event_type"])
+    pipe.run(flagged, "ts", "value", run_id="r1", extra_aggs=bad)
+    assert _assert_layout(pipe, "r1") == 1
+    for t in TIERS:
+        inferred = spark.read.parquet(pipe.tier_path(t)).schema
+        assert pipe.read_tier(t).schema == inferred, t
+        assert "n_bad" in inferred.fieldNames()
+        assert inferred["day"].dataType == T.DateType()
+
+    day = "2024-01-30"
+    monkeypatch.setattr(lineage, "ROWS_PER_FILE", 7)
+    split = TierPipeline(spark, out_dir + "_split", ["event_type"])
+    split.run(flagged.where(F.to_date("ts") == day), "ts", "value",
+              run_id="r2", extra_aggs=bad)
+    assert _assert_layout(split, "r2") > 1
+    for t in TIERS:
+        assert (_lineage_hashes(split, f"tier_{t}")
+                == {day: _lineage_hashes(pipe, f"tier_{t}")[day]}), t
 
 
 def test_hidden_lineage_files_ignored(spark, tmp_path):

@@ -354,3 +354,23 @@ def test_ets_sse_bit_exact():
         else:
             em = (y - fb) / fb
             assert got == float(np.dot(em, em))
+
+
+@pytest.mark.parametrize("n", [2, 64, 65, 128, 129])
+def test_ses_levels_and_sse_bit_exact(n, monkeypatch):
+    """C SES levels, C-levels SSE and the prepared one-call SSE equal the
+    numpy block formula bit for bit across block boundaries (n - 1 = 63,
+    64, 127, 128 level steps) and at α = 1, where c^j underflows and every
+    level is the observation itself."""
+    from sparkts.kernels import scan
+
+    y = np.random.default_rng(n).normal(50, 10, n)
+    alphas = (0.01, 0.1, 0.5, 0.99, 1.0)
+    native = [(scan._ses_levels(y, a), scan.ses_sse(y, a), scan._sse_fn(y)(a))
+              for a in alphas]
+    monkeypatch.setattr(nat, "LIB", None)
+    for a, (levels, sse, prepared) in zip(alphas, native):
+        ref = scan._ses_levels(y, a)
+        assert np.array_equal(levels, ref), a
+        assert sse == scan.ses_sse(y, a) == prepared, a
+    assert np.array_equal(scan._ses_levels(y, 1.0), y)
