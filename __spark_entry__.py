@@ -3005,8 +3005,15 @@ def _golden_ses_ctes(tag: str, tbl: str, lo: float, up: float) -> str:
     via the SES power-series closed form l_k = c^{k−1}y₁ + Σ α·c^{k−i}·y_i
     as a correlated subquery. Terminates like the kernel (width < 1e-12,
     tie, or 80 iterations); ``ln_{tag}`` is the SES level at
-    α* = (a+b)/2. Late-iteration branch flips perturb α* below 1e-10."""
+    α* = (a+b)/2. Late-iteration branch flips perturb α* below 1e-10.
+
+    ``tbl`` is first copied into ``m_{tag} AS MATERIALIZED``: DuckDB 1.0
+    inlines a plain CTE into every reference, so each correlated SSE
+    subquery (two per iteration, up to 80 iterations) would recompute the
+    whole input chain (intermittent_opt_fc at sf0.001: 6.9 GB and 52 s
+    inlined, 0.33 GB and 5 s materialized)."""
     g = (5.0 ** 0.5 + 1.0) / 2.0  # == kernels/scan.py _GOLDEN bit-for-bit
+    src, tbl = tbl, f"m_{tag}"
 
     def sse(uid: str, aexpr: str) -> str:
         # SSE(α) for the series `uid`; `aexpr` repeats — identical floats.
@@ -3031,6 +3038,7 @@ def _golden_ses_ctes(tag: str, tbl: str, lo: float, up: float) -> str:
     new_cp = f"(r.dp - (r.dp - r.a) / {g!r})"
     new_dp = f"(r.cp + (r.b - r.cp) / {g!r})"
     return f"""
+    {tbl} AS MATERIALIZED (SELECT unique_id, rn, n, y FROM {src}),
     u_{tag} AS (SELECT DISTINCT unique_id FROM {tbl}),
     rec_{tag}(unique_id, i, a, b, cp, dp, fc, fd) AS (
       SELECT u.unique_id, 0, {lo_s}, {up_s}, {c0}, {d0},
@@ -3203,7 +3211,7 @@ def _ses_opt_sql(lo: float = 0.01, up: float = 0.99, h: int = 3) -> str:
     SET threads: DuckDB 1.0's parallel executor intermittently drops a
     series from recursive CTEs whose recursive term contains correlated
     subqueries (observed ~1/10 runs); single-threaded it is deterministic
-    (the whole oracle suite runs < 1 min single-threaded)."""
+    (all oracle_sql() twins at sf0.001 run in ≈85 s on one connection)."""
     return f"""
     SET threads TO 1;
     WITH RECURSIVE dpanel AS (

@@ -26,7 +26,9 @@ def get_spark(
     """Build (or fetch) a SparkSession with the engine's standard conf.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS or *]``. In cluster
-    deployments pass ``master=None`` and let spark-submit own it.
+    deployments pass ``master=None`` and let spark-submit own it. In local
+    mode the driver heap is ``$SPARKTS_DRIVER_MEM``, else min(16 GiB, a
+    quarter of physical memory).
     """
     for v in _BLAS_VARS:
         os.environ.setdefault(v, "1")
@@ -63,8 +65,13 @@ def get_spark(
             # in the kernel and high-parallelism runs spend >25% CPU in sys
             # time — extraction at local[32] measured 3.6x SLOWER than
             # local[8] before this, 2.4x faster after. On a real cluster the
-            # same conf goes to spark.executor.extraJavaOptions.
-            mem = os.environ.get("SPARKTS_DRIVER_MEM", "16g")
+            # same conf goes to spark.executor.extraJavaOptions. The default
+            # size is min(16g, RAM/4) in MiB: a pre-touched heap larger than
+            # RAM kills the JVM before it reports its port.
+            phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+            mem = os.environ.get("SPARKTS_DRIVER_MEM") or (
+                f"{min(16 << 10, phys // 4 >> 20)}m"
+            )
             builder = (
                 builder.config("spark.driver.memory", mem)
                 .config(
