@@ -131,8 +131,9 @@ def q_stream_5m_cascade(spark, sf_dir):
     oracle): the 1m base tier is produced by Structured Streaming
     (readStream over the events parquet, availableNow backlog) sunk
     through the EXACTLY-ONCE batch-id commit protocol
-    (streaming/rollup.py:55 commit_batch → marker), merge-on-read of
-    committed batches only, then the batch cascade 1m→5m. Green ⟺ the
+    (``sparkts.streaming.rollup.commit_batch``: data, then marker),
+    merge-on-read of committed batches only, then the batch cascade
+    1m→5m. Green ⟺ the
     streamed-and-committed 1m cascade ≡ the oracle's direct 5m SQL."""
     import hashlib
     import os

@@ -494,7 +494,12 @@ int sparkts_ses_levels(const double *y, long long n, double alpha,
         const double *cpow;
         k = end - start;
         cpow = (k == 64) ? cp64 : cptail;
-        if (cpow[k - 1] == 0.0) { /* alpha == 1 edge: c^j underflows */
+        for (j = 0; j < k; j++)
+            cinv[j] = y[start + j] / cpow[j];
+        t[0] = cinv[0];
+        for (j = 1; j < k; j++)
+            t[j] = t[j - 1] + cinv[j];
+        if (!isfinite(t[k - 1])) { /* alpha -> 1 edge: y / c^j overflows */
             for (j = 0; j < k; j++) {
                 l_prev = alpha * y[start + j] + c * l_prev;
                 levels[start + j] = l_prev;
@@ -502,11 +507,6 @@ int sparkts_ses_levels(const double *y, long long n, double alpha,
             start = end;
             continue;
         }
-        for (j = 0; j < k; j++)
-            cinv[j] = y[start + j] / cpow[j];
-        t[0] = cinv[0];
-        for (j = 1; j < k; j++)
-            t[j] = t[j - 1] + cinv[j];
         for (j = 0; j < k; j++)
             levels[start + j] = (c * cpow[j]) * l_prev
                                 + alpha * cpow[j] * t[j];

@@ -11,9 +11,10 @@ has the closed form within a block of size B
     l_{s+k} = c^{k+1}·l_{s-1} + α·c^k·Σ_{j≤k} c^{-j}·y_{s+j},   c = 1-α,
 
 so each block is one cumsum + two elementwise products; Python-level work is
-O(n/B) instead of O(n). B=64 bounds c^{-j} at c^{-63} which is representable
-and precision-safe (terms the trick loses are < c^63 in relative weight —
-below double precision for any α).
+O(n/B) instead of O(n). B=64 bounds c^{-j} at c^{-63}; terms the trick
+loses are < c^63 in relative weight, below double precision for any α. For
+α just below 1, c^{-63} or the running sum overflows, and that block runs
+the recurrence step by step instead.
 """
 
 from __future__ import annotations
@@ -34,9 +35,9 @@ _EMPTY64 = np.empty(0, dtype=np.float64)
 
 def _ses_levels(y: np.ndarray, alpha: float) -> np.ndarray:
     """Level trajectory of the SES recurrence (shared core of ses_scan /
-    ses_sse). A block whose c^j underflows to 0 (α == 1, c = 0) cannot be
-    divided by c^j, so it runs the recurrence step by step; every other
-    block divides directly."""
+    ses_sse). A block whose y_j / c^j or running sum is not finite (α at
+    or just below 1, where c^j underflows) runs the recurrence step by
+    step; every other block uses the block formula."""
     if _native.LIB is not None and y.size > 1:
         # r6: bit-exact C body for the block formula below (pinned in
         # tests/test_native.py) — the golden-section optimizer calls this
@@ -57,13 +58,13 @@ def _ses_levels(y: np.ndarray, alpha: float) -> np.ndarray:
     while start < n:
         end = min(start + _BLOCK, n)
         cpow = c ** _ARANGE[: end - start]                   # c^0..c^{k-1}
-        if cpow[-1] == 0.0:                                  # α == 1 edge
+        with np.errstate(divide="ignore", over="ignore", invalid="ignore"):
+            t = np.cumsum(y[start:end] / cpow)               # Σ y_j · c^{-j}
+        if not np.isfinite(t[-1]):                           # α → 1 edge
             for j in range(start, end):
                 l_prev = levels[j] = alpha * y[j] + c * l_prev
             start = end
             continue
-        cinv = y[start:end] / cpow                           # y_j · c^{-j}
-        t = np.cumsum(cinv)
         blk = (c * cpow) * l_prev + alpha * cpow * t
         levels[start:end] = blk
         l_prev = blk[-1]

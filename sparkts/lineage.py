@@ -131,16 +131,36 @@ class LineageStore:
         return self.completed().get(stage, set())
 
     def append(self, rows: list[dict]) -> None:
-        """Commit rows as one parquet file: write hidden, then rename."""
+        """Commit rows as one parquet file (see ``_publish``)."""
         if not rows:
             return
         table = pa.Table.from_pylist(
             [{c: r[c] for c in LINEAGE_COLS} for r in rows], schema=LINEAGE_SCHEMA)
-        os.makedirs(self.path, exist_ok=True)
-        name = f"part-{uuid.uuid4().hex}.parquet"
-        tmp = os.path.join(self.path, f".{name}.tmp")
-        pq.write_table(table, tmp, compression="zstd")
-        os.replace(tmp, os.path.join(self.path, name))
+        _publish(os.path.join(self.path, f"part-{uuid.uuid4().hex}.parquet"),
+                 lambda tmp: pq.write_table(table, tmp, compression="zstd"))
+
+
+def _publish(path: str, write) -> None:
+    """Publish a commit file on the driver: ``write(tmp)`` fills a hidden
+    ``.``-prefixed file next to ``path``, which is then renamed onto
+    ``path`` in one atomic step. Readers skip hidden names, so they see the
+    file whole or not at all, and a crash leaves only a hidden leftover."""
+    directory, name = os.path.split(path)
+    os.makedirs(directory, exist_ok=True)
+    tmp = os.path.join(directory, f".{name}.{uuid.uuid4().hex}.tmp")
+    write(tmp)
+    os.replace(tmp, path)
+
+
+def _spark_schema(directory: str) -> T.StructType:
+    """The Spark schema stored in the footer of one parquet file of
+    ``directory`` (every field nullable, as Spark reads it back). Passing it
+    to ``spark.read.schema`` spares Spark its schema-inference job."""
+    part = next(f for f in sorted(os.listdir(directory))
+                if f.endswith(".parquet") and not f.startswith((".", "_")))
+    meta = pq.read_schema(os.path.join(directory, part)).metadata
+    data = T.StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    return T.StructType([T.StructField(f.name, f.dataType) for f in data])
 
 
 def _reconcile(out_dir: str, completed: set[str]) -> None:
@@ -194,15 +214,9 @@ class TierPipeline:
         files' parquet footers, so Spark launches no schema-inference job."""
         if not days:
             raise FileNotFoundError(f"{self.tier_path(tier)}: no committed day")
-        day_dir = os.path.join(self.tier_path(tier), f"day={min(days)}")
-        part = next(f for f in sorted(os.listdir(day_dir))
-                    if f.endswith(".parquet") and not f.startswith((".", "_")))
-        meta = pq.read_schema(os.path.join(day_dir, part)).metadata
-        data = T.StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
-        schema = T.StructType([T.StructField(f.name, f.dataType) for f in data]
-                              + [T.StructField("day", T.DateType())])
-        return (self.spark.read.schema(schema).parquet(self.tier_path(tier))
-                .where(_day_in(days)))
+        schema = _spark_schema(os.path.join(self.tier_path(tier), f"day={min(days)}"))
+        return (self.spark.read.schema(schema.add("day", T.DateType()))
+                .parquet(self.tier_path(tier)).where(_day_in(days)))
 
     # ------------------------------------------------------------------ #
     def run(

@@ -25,10 +25,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's standard conf.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS or *]``. In cluster
-    deployments pass ``master=None`` and let spark-submit own it. In local
-    mode the driver heap is ``$SPARKTS_DRIVER_MEM``, else min(16 GiB, a
-    quarter of physical memory).
+    ``master=None`` (the default) means ``local[$SPARK_GRAFT_CPUS or *]``.
+    In cluster deployments pass ``master=""``: no master and no heap conf
+    is set, so spark-submit owns both. In local mode the driver heap is
+    ``$SPARKTS_DRIVER_MEM``, else min(16 GiB, a quarter of physical
+    memory).
     """
     for v in _BLAS_VARS:
         os.environ.setdefault(v, "1")

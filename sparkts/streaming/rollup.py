@@ -13,13 +13,38 @@ Late data: the watermark bounds state; rows later than the watermark are
 dropped by Spark (documented behavior). The batch backfill path
 (rollup_base over the raw table) remains the source of truth for replays —
 the lineage table records which bucket ranges came from which path.
+
+Sink layout and commit protocol (``<out>`` is a driver-visible path):
+
+* ``data/batch=<id>/`` — one micro-batch's rows, the one Spark write a
+  batch needs;
+* ``commits/batch=<id>`` — its marker, a zero-byte regular file published
+  on the driver after the data write (hidden name, then ``os.replace``:
+  ``sparkts.lineage._publish``, the same step that commits lineage);
+* ``floor/next_id.parquet`` — the lowest id the next stream writer may
+  use, written by ``compact_tier_output`` the same way.
+
+Marker listing (``_committed``) and the floor read are plain file-system
+calls on the driver, and readers take the Spark schema from a committed
+file's footer, so committing, listing and opening the sink launch no
+Spark job. Markers from older layouts (parquet directories under
+``commits/``) are not read: no persisted sink predates this layout.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import os
+import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Window as W, functions as F, types as T
+
+from sparkts.lineage import _publish, _spark_schema
 from sparkts.operators.rollup import TIERS
+
+#: file under ``<out>/floor`` that holds the next stream writer's id floor
+_FLOOR_FILE = "next_id.parquet"
 
 
 def stream_rollup(
@@ -52,28 +77,73 @@ def stream_rollup(
     )
 
 
+def _committed(out_path: str) -> list[int]:
+    """Committed batch ids, listed on the driver: the regular files named
+    ``batch=<id>`` in ``commits``. Hidden names (an unfinished marker) are
+    skipped and a missing directory means nothing is committed; any other
+    listing error propagates."""
+    try:
+        with os.scandir(f"{out_path}/commits") as it:
+            return sorted(int(e.name[len("batch="):]) for e in it
+                          if e.name.startswith("batch=") and e.is_file())
+    except FileNotFoundError:
+        return []
+
+
+def _mark(out_path: str, batch_id: int) -> None:
+    """Publish batch ``batch_id``'s zero-byte marker."""
+    _publish(f"{out_path}/commits/batch={batch_id}",
+             lambda tmp: open(tmp, "wb").close())
+
+
+def _floor(out_path: str) -> int:
+    """The id floor ``compact_tier_output`` left, read on the driver; 0
+    when no compaction has run."""
+    try:
+        table = pq.read_table(f"{out_path}/floor/{_FLOOR_FILE}")
+    except FileNotFoundError:
+        return 0
+    return int(table.column("next_id")[0].as_py())
+
+
+def _read_batches(spark, out_path: str, ids: list[int]) -> DataFrame:
+    """The ``data/batch=<id>`` directories of ``ids``, with their ``batch``
+    column. The schema comes from a file footer of the newest one, so
+    Spark runs no schema-inference job, and orphan directories are never
+    listed."""
+    data = f"{out_path}/data"
+    schema = _spark_schema(f"{data}/batch={max(ids)}").add("batch", T.LongType())
+    return (spark.read.schema(schema).option("basePath", data)
+            .parquet(*(f"{data}/batch={b}" for b in ids)))
+
+
+def _latest_wins(df: DataFrame, key_cols: list[str]) -> DataFrame:
+    """Keep the highest ``batch``'s row per (keys, bucket); drop ``batch``."""
+    w = W.partitionBy(*key_cols, "bucket").orderBy(F.col("batch").desc())
+    return (df.withColumn("__rn", F.row_number().over(w))
+            .where(F.col("__rn") == 1).drop("__rn", "batch"))
+
+
 def commit_batch(batch_df: DataFrame, batch_id: int, out_path: str) -> None:
-    """Batch-id-keyed IDEMPOTENT commit (round-4 brief #4; the parquet
-    stand-in for an Iceberg transactional MERGE):
+    """Batch-id-keyed IDEMPOTENT commit (the parquet stand-in for an
+    Iceberg transactional MERGE):
 
     1. the batch's rows land in ``data/batch=<id>`` with OVERWRITE — a
        replayed batch (foreachBatch is at-least-once after a crash/restart)
        rewrites its own directory instead of appending duplicates;
-    2. only then is the marker ``commits/batch=<id>`` written — readers
-       take committed batches only, so a crash between the data write and
-       the marker write leaves an invisible orphan that the replay simply
-       overwrites.
+    2. only then is the marker ``commits/batch=<id>`` published: a
+       zero-byte file created under a hidden name on the driver and renamed
+       into place, so it costs no Spark job. Readers take committed batches
+       only, so a crash between the data write and the rename leaves an
+       invisible orphan (and at most a hidden leftover in ``commits``)
+       that the replay overwrites; the replay re-creates the same marker.
 
     Observable output is therefore exactly-once: duplicate invocations of
-    the same (batch_df, batch_id) are byte-idempotent (tested by replaying
-    a batch in tests/test_streaming.py)."""
-    spark = batch_df.sparkSession
+    the same (batch_df, batch_id) are idempotent (tested by replaying
+    batches, and by a crash at the marker, in tests/test_streaming.py)."""
     batch_df.write.mode("overwrite").parquet(
         f"{out_path}/data/batch={int(batch_id)}")
-    spark.createDataFrame([(int(batch_id),)], "batch_id long").coalesce(
-        1
-    ).write.mode("overwrite").parquet(
-        f"{out_path}/commits/batch={int(batch_id)}")
+    _mark(out_path, int(batch_id))
 
 
 def write_tier_stream(
@@ -91,23 +161,19 @@ def write_tier_stream(
     comes from the streaming checkpoint; duplicate-delivery safety (the
     at-least-once foreachBatch contract) comes from the commit protocol.
     ``available_now`` processes the backlog and stops — the batch-like mode
-    used in tests and backfills."""
+    used in tests and backfills. With a watermark in update mode, one
+    trigger runs two micro-batches (the data batch, then a no-data batch
+    that advances the watermark), and each commits.
 
-    # id floor: checkpoint micro-batch counters restart at 0 with a fresh
-    # checkpoint, and compact_tier_output consolidates history into a
-    # high id — committing raw counter ids would overwrite those
-    # generations. The floor (written by the compactor) is read ONCE at
-    # writer start, so within-run replays keep their exact ids
-    # (byte-idempotent), while a writer started after a compaction lands
-    # strictly above the consolidated generation.
-    from pyspark.errors import AnalysisException
-
-    spark = tier_df.sparkSession
-    try:
-        floor = int(spark.read.parquet(f"{out_path}/floor")
-                    .agg(F.max("next_id")).collect()[0][0] or 0)
-    except AnalysisException:
-        floor = 0
+    Id floor: checkpoint micro-batch counters restart at 0 with a fresh
+    checkpoint, and ``compact_tier_output`` consolidates history into a
+    high id, so committing raw counter ids would overwrite that
+    generation. The writer reads the floor file once, at start, on the
+    driver with pyarrow (no file yet means floor 0) and commits batch
+    ``floor + batch_id``: replays within a run keep their exact ids, and a
+    writer started after a compaction lands strictly above the
+    consolidated generation."""
+    floor = _floor(out_path)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         commit_batch(batch_df, floor + batch_id, out_path)
@@ -132,33 +198,22 @@ BATCH_ID_BASE = 1 << 33
 
 def commit_tier_batch(df: DataFrame, out_path: str) -> int:
     """Transactional BATCH publish of a tier table through the same
-    batch-id commit protocol the streaming sink uses (round-5 stretch —
-    the parquet+manifest stand-in for an Iceberg snapshot commit, Iceberg
-    jars being unavailable offline): the new generation lands in
-    ``data/batch=<id>`` first, the marker second, so a reader
-    (``read_tier_stream_output``) sees the PREVIOUS generation until the
-    marker lands and never a torn write. Batch and streaming writers can
-    share one output directory: batch generations live in the disjoint
-    id namespace ≥ ``BATCH_ID_BASE`` (streaming micro-batch ids are
-    checkpoint counters from 0, NOT allocated from the commits dir, so
-    "max committed + 1" alone would collide with the stream's next
-    micro-batch and be silently overwritten). Under latest-wins
-    merge-on-read a batch publish therefore supersedes stream batches —
-    snapshot-replaces-table semantics. Returns the committed id."""
-    from pyspark.errors import AnalysisException
-
-    spark = df.sparkSession
-    try:
-        committed = [
-            int(r[0]) for r in spark.read.parquet(f"{out_path}/commits")
-            .select("batch_id").collect()]
-    except AnalysisException:
-        # missing commits dir = first publish; any OTHER read failure must
-        # propagate — treating a transient listing error as "nothing
-        # committed" would re-allocate id BATCH_ID_BASE and overwrite the
-        # oldest committed generation
-        committed = []
-    new_id = max((c for c in committed if c >= BATCH_ID_BASE),
+    batch-id commit protocol the streaming sink uses (the parquet+marker
+    stand-in for an Iceberg snapshot commit, Iceberg jars being
+    unavailable offline): the new generation lands in ``data/batch=<id>``
+    first, the marker second, so a reader (``read_tier_snapshot``) sees the
+    PREVIOUS generation until the marker lands and never a torn write.
+    Batch and streaming writers can share one output directory: batch
+    generations live in the disjoint id namespace ≥ ``BATCH_ID_BASE``
+    (streaming micro-batch ids are checkpoint counters from 0, NOT
+    allocated from the commits dir, so "max committed + 1" alone would
+    collide with the stream's next micro-batch and be silently
+    overwritten). Under latest-wins merge-on-read a batch publish therefore
+    supersedes stream batches — snapshot-replaces-table semantics. A
+    listing error other than a missing ``commits`` directory propagates:
+    treating it as "nothing committed" would re-allocate ``BATCH_ID_BASE``
+    and overwrite the oldest generation. Returns the committed id."""
+    new_id = max((c for c in _committed(out_path) if c >= BATCH_ID_BASE),
                  default=BATCH_ID_BASE - 1) + 1
     commit_batch(df, new_id, out_path)
     return new_id
@@ -170,36 +225,22 @@ def read_tier_snapshot(spark, out_path: str) -> DataFrame:
     semantics), unlike ``read_tier_stream_output``'s per-bucket
     latest-wins merge (streaming upsert semantics). Torn writes (data
     without marker) stay invisible either way."""
-    committed = [
-        int(r[0]) for r in spark.read.parquet(f"{out_path}/commits")
-        .select("batch_id").collect()]
+    committed = _committed(out_path)
     if not committed:
         raise ValueError(f"nothing committed under {out_path}")
-    return (spark.read.parquet(f"{out_path}/data")
-            .where(F.col("batch") == max(committed)).drop("batch"))
+    return _read_batches(spark, out_path, [max(committed)]).drop("batch")
 
 
 def read_tier_stream_output(spark, out_path: str, key_cols: list[str]) -> DataFrame:
     """Merge-on-read over the committed sink output: committed batches
-    only (uncommitted orphans from a mid-write crash are invisible),
-    latest batch id wins per (keys, bucket). The committed-id set is
-    commit-log metadata — O(#batches), collected driver-side like any
-    table manifest — and the ``batch`` partition filter prunes orphan
-    directories at the scan."""
-    from pyspark.sql import Window as W
-
-    committed = [
-        int(r[0])
-        for r in spark.read.parquet(f"{out_path}/commits").select("batch_id").collect()
-    ]
-    df = spark.read.parquet(f"{out_path}/data").where(
-        F.col("batch").isin(committed))
-    w = W.partitionBy(*key_cols, "bucket").orderBy(F.col("batch").desc())
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn", "batch")
-    )
+    only (uncommitted orphans from a mid-write crash are never read),
+    latest batch id wins per (keys, bucket). The committed ids come from a
+    driver-side listing of the marker files, and only their data
+    directories are scanned."""
+    committed = _committed(out_path)
+    if not committed:
+        raise ValueError(f"nothing committed under {out_path}")
+    return _latest_wins(_read_batches(spark, out_path, committed), key_cols)
 
 
 def compact_tier_output(spark, out_path: str, key_cols: list[str]) -> int:
@@ -210,57 +251,49 @@ def compact_tier_output(spark, out_path: str, key_cols: list[str]) -> int:
     Protocol-safe at every instant: (1) materialize the current merged
     view into a NEW batch directory with id = max(committed)+1 via the
     same ``commit_batch`` (data before marker); (2) only after its marker
-    lands, retire the superseded markers and data directories. A reader
-    concurrent with step 1 sees the old batches; after step 2 it sees the
-    consolidated batch — identical values either way, because latest-wins
-    per (keys, bucket) makes the consolidated batch shadow everything it
-    folded. A crash mid-compaction leaves both generations committed —
-    still correct, and the next compaction finishes the GC. A STALE replay
-    of a pre-compaction micro-batch (id < consolidated) re-creates a
-    directory the latest-wins read ignores.
+    lands, retire the superseded markers, then their data directories. A
+    reader concurrent with step 1 sees the old batches; after step 2 it
+    sees the consolidated batch — identical values either way, because
+    latest-wins per (keys, bucket) makes the consolidated batch shadow
+    everything it folded. A crash mid-compaction leaves both generations
+    committed — still correct, and the next compaction finishes the GC. A
+    STALE replay of a pre-compaction micro-batch (id < consolidated)
+    re-creates a directory the latest-wins read ignores.
 
     Compaction must not race a RUNNING stream writer (it is the OPTIMIZE
     step between runs): a live writer's next checkpoint counter would be
     exactly max(committed)+1 — the consolidated id — and its overwrite
-    would destroy the folded history. The ``floor`` record written below
-    makes the NEXT writer start safe mechanically: ``write_tier_stream``
-    reads it once at start and offsets every checkpoint id above the
-    consolidated generation (fresh or resumed checkpoint alike).
+    would destroy the folded history. The floor written last makes the
+    NEXT writer start safe mechanically: ``floor/next_id.parquet`` holds
+    one ``next_id`` row (consolidated id + 1), written with pyarrow on the
+    driver and renamed into place like a marker, and ``write_tier_stream``
+    offsets every checkpoint id by it (fresh or resumed checkpoint alike).
 
-    Namespace discipline (r6 fix of the round-5 ADVICE finding): stream
-    generations (< BATCH_ID_BASE) and batch-publish generations
-    (≥ BATCH_ID_BASE) are compacted SEPARATELY. Folding everything into
-    max(committed)+1 would, whenever any batch generation exists, land the
-    consolidated id — and the floor — inside the batch namespace, so later
-    stream micro-batches would allocate batch-namespace ids and a
-    subsequent ``commit_tier_batch`` could silently overwrite (or be
-    overwritten by) a live stream writer. Instead: the stream namespace
-    consolidates into max(stream ids)+1 (always < BATCH_ID_BASE — enforced)
-    and the floor stays inside the stream namespace; the batch namespace
-    needs no merge at all (snapshot-replaces-table: the highest batch id IS
-    the table), so compaction simply retires the superseded batch
-    generations. The merged-read semantics are unchanged either way:
-    latest-wins per bucket still sees exactly the same values.
+    Namespace discipline: stream generations (< BATCH_ID_BASE) and
+    batch-publish generations (≥ BATCH_ID_BASE) are compacted SEPARATELY.
+    Folding everything into max(committed)+1 would, whenever any batch
+    generation exists, land the consolidated id — and the floor — inside
+    the batch namespace, so later stream micro-batches would allocate
+    batch-namespace ids and a subsequent ``commit_tier_batch`` could
+    silently overwrite (or be overwritten by) a live stream writer.
+    Instead: the stream namespace consolidates into max(stream ids)+1
+    (always < BATCH_ID_BASE — enforced) and the floor stays inside the
+    stream namespace; the batch namespace needs no merge at all
+    (snapshot-replaces-table: the highest batch id IS the table), so
+    compaction simply retires the superseded batch generations. The
+    merged-read semantics are unchanged either way: latest-wins per bucket
+    still sees exactly the same values.
 
     Returns the consolidated stream batch id (or, when only batch
     generations exist, the surviving snapshot id)."""
-    committed = [
-        int(r[0])
-        for r in spark.read.parquet(f"{out_path}/commits")
-        .select("batch_id").collect()
-    ]
+    committed = _committed(out_path)
     if not committed:
         raise ValueError(f"nothing committed under {out_path}")
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(out_path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
 
     def gc(ids):
         for b in ids:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(
-                f"{out_path}/commits/batch={b}"), True)
-            fs.delete(jvm.org.apache.hadoop.fs.Path(
-                f"{out_path}/data/batch={b}"), True)
+            os.remove(f"{out_path}/commits/batch={b}")
+            shutil.rmtree(f"{out_path}/data/batch={b}", ignore_errors=True)
 
     stream_gens = [c for c in committed if c < BATCH_ID_BASE]
     batch_gens = [c for c in committed if c >= BATCH_ID_BASE]
@@ -277,20 +310,15 @@ def compact_tier_output(spark, out_path: str, key_cols: list[str]) -> int:
             f"consolidated id {new_id} would enter the batch namespace")
     # merged view of the STREAM generations only (a committed batch
     # snapshot keeps shadowing per-bucket under latest-wins regardless)
-    from pyspark.sql import Window as W
-
-    df = spark.read.parquet(f"{out_path}/data").where(
-        F.col("batch").isin(stream_gens))
-    w = W.partitionBy(*key_cols, "bucket").orderBy(F.col("batch").desc())
-    merged = (df.withColumn("__rn", F.row_number().over(w))
-              .where(F.col("__rn") == 1).drop("__rn", "batch"))
+    merged = _latest_wins(_read_batches(spark, out_path, stream_gens), key_cols)
     commit_batch(merged, new_id, out_path)
     # GC superseded stream generations only after the marker landed
     gc(stream_gens)
     # id floor for the next stream writer (see write_tier_stream); stays
     # strictly inside the stream namespace
-    spark.createDataFrame([(new_id + 1,)], "next_id long").coalesce(
-        1).write.mode("overwrite").parquet(f"{out_path}/floor")
+    floor = pa.table({"next_id": pa.array([new_id + 1], pa.int64())})
+    _publish(f"{out_path}/floor/{_FLOOR_FILE}",
+             lambda tmp: pq.write_table(floor, tmp))
     return new_id
 
 

@@ -374,3 +374,24 @@ def test_ses_levels_and_sse_bit_exact(n, monkeypatch):
         assert np.array_equal(levels, ref), a
         assert sse == scan.ses_sse(y, a) == prepared, a
     assert np.array_equal(scan._ses_levels(y, 1.0), y)
+
+
+@pytest.mark.parametrize("alpha", [0.99999, 0.999985])
+def test_ses_levels_finite_for_alpha_just_below_one(alpha, monkeypatch):
+    """At α just below 1, c^63 is subnormal and y_j / c^j overflows in the
+    block formula; such blocks run step by step, so both twins give finite
+    levels equal to the plain recurrence."""
+    from sparkts.kernels import scan
+
+    y = np.random.default_rng(0).normal(50, 10, 130)
+    plain = np.empty_like(y)
+    plain[0] = y[0]
+    for j in range(1, y.size):
+        plain[j] = alpha * y[j] + (1 - alpha) * plain[j - 1]
+    native = scan._ses_levels(y, alpha)
+    monkeypatch.setattr(nat, "LIB", None)
+    python = scan._ses_levels(y, alpha)
+    for levels in (native, python):
+        assert np.isfinite(levels).all()
+        np.testing.assert_allclose(levels, plain, rtol=1e-12)
+    assert np.array_equal(native, python)

@@ -81,3 +81,11 @@ def test_cluster_master_sets_no_heap(monkeypatch, conf):
     monkeypatch.delenv("SPARKTS_DRIVER_MEM", raising=False)
     session.get_spark(master="spark://h:7077")
     assert "spark.driver.memory" not in conf
+
+
+def test_empty_master_leaves_master_and_heap_to_spark_submit(monkeypatch, conf):
+    monkeypatch.delenv("SPARKTS_DRIVER_MEM", raising=False)
+    session.get_spark(master="")
+    assert "master" not in conf
+    assert "spark.driver.memory" not in conf
+    assert "spark.driver.extraJavaOptions" not in conf

@@ -390,3 +390,113 @@ def test_batch_publish_ids_disjoint_from_stream_ids(
     # the batch generation, and the snapshot must still be the publish
     commit_batch(tier.limit(4), 2, out)
     assert read_tier_snapshot(spark, out).count() == tier.count()
+
+
+def _jobs_started(spark, run) -> list:
+    """Ids of the Spark jobs that ``run()`` starts. It runs under a fresh
+    job group; then one sentinel job runs in a second group, and the status
+    store is polled until it has seen that job. The listener bus delivers
+    events in order, so by then every job of the first group is recorded."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "driver-side commit probe")
+    try:
+        run()
+    finally:
+        sc.setJobGroup(f"{group}-sentinel", "sentinel")
+        spark.range(1).collect()
+        for k in ("spark.jobGroup.id", "spark.job.description",
+                  "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 60
+    while not tracker.getJobIdsForGroup(f"{group}-sentinel"):
+        assert time.monotonic() < deadline, "sentinel job never recorded"
+        time.sleep(0.05)
+    return list(tracker.getJobIdsForGroup(group))
+
+
+def test_crash_at_marker_rename_then_resume(spark, events_dir,
+                                            tmp_path_factory, monkeypatch):
+    """A crash at the real commit point: inside a live write_tier_stream
+    run, after a micro-batch's data write and before its marker's rename.
+    Readers see only the earlier batches, the hidden leftover in
+    ``commits/`` is ignored, and rerunning from the same checkpoint gives
+    the batch rollup with no duplicate (keys, bucket). Marker writes,
+    commit listings and floor reads start no Spark job."""
+    import sparkts.streaming.rollup as sr
+    from pyspark.errors import StreamingQueryException
+    from sparkts.streaming import compact_tier_output
+
+    out = str(tmp_path_factory.mktemp("crash_out"))
+    ckpt = str(tmp_path_factory.mktemp("crash_ckpt"))
+    raw = spark.read.parquet(events_dir)
+    keys = ["event_type"]
+
+    publish, calls = sr._publish, []
+
+    def crash_at_second_rename(path, write):
+        calls.append(path)
+        if len(calls) != 2:
+            return publish(path, write)
+        # what _publish does up to its rename: the hidden file is written,
+        # then the process "dies" before os.replace
+        write(os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.tmp"))
+        raise OSError("crash before the marker's rename")
+
+    monkeypatch.setattr(sr, "_publish", crash_at_second_rename)
+
+    def run_stream():
+        stream = (spark.readStream.schema(raw.schema)
+                  .option("maxFilesPerTrigger", 2).parquet(events_dir))
+        tier = stream_rollup(stream, "ts", keys, "value", tier="1m",
+                             watermark="365 days")
+        write_tier_stream(tier, out, ckpt, available_now=True).awaitTermination(180)
+
+    with pytest.raises(StreamingQueryException):
+        run_stream()
+    # batch 1's data landed before the crash, its marker did not
+    assert sr._committed(out) == [0]
+    assert os.path.isdir(f"{out}/data/batch=1")
+    assert [f for f in os.listdir(f"{out}/commits")
+            if f.startswith(".")] == [".batch=1.tmp"]
+    cols = ["event_type", "bucket", "n_rows", "v_sum", "v_min", "v_max"]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(cols).collect())
+
+    assert rows(read_tier_stream_output(spark, out, keys)) == rows(
+        spark.read.parquet(f"{out}/data/batch=0"))
+
+    # restart from the same checkpoint: batch 1 is replayed with its id
+    run_stream()
+    assert len(calls) > 2 and sr._committed(out)[:2] == [0, 1]
+    assert os.path.exists(f"{out}/commits/.batch=1.tmp")
+    got = read_tier_stream_output(spark, out, keys).select(cols).toPandas()
+    assert not got.duplicated(keys + ["bucket"]).any()
+    want = rollup_base(raw, "ts", keys, "value", "1m").select(cols).toPandas()
+    pd.testing.assert_frame_equal(
+        got.sort_values(keys + ["bucket"]).reset_index(drop=True),
+        want.sort_values(keys + ["bucket"]).reset_index(drop=True),
+        check_exact=False, rtol=1e-12)
+
+    # the driver-side commit calls start no Spark job (the sentinel in
+    # _jobs_started shows that a job would be seen)
+    new_id = compact_tier_output(spark, out, keys)
+    probe = str(tmp_path_factory.mktemp("crash_probe"))
+    seen = {}
+
+    def driver_calls():
+        sr._mark(probe, 7)
+        seen["probe"] = sr._committed(probe)
+        seen["committed"] = sr._committed(out)
+        seen["floor"] = sr._floor(out)
+        seen["no_floor"] = sr._floor(probe)
+
+    assert _jobs_started(spark, driver_calls) == []
+    assert seen == {"probe": [7], "committed": [new_id],
+                    "floor": new_id + 1, "no_floor": 0}
+    assert _jobs_started(spark, lambda: spark.range(3).count())
