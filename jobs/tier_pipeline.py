@@ -18,9 +18,9 @@ same command after a kill and completed days are skipped) → retention →
 gap-filled 1h panel → SeasonalNaive/Naive forecast written next to the
 tiers. Prints a one-line JSON summary to stdout.
 
-The same conf block get_spark() applies locally ships to executors on a
-real cluster (spark.executor.extraJavaOptions for the pre-touched heap,
-OPENBLAS/OMP clamps via spark.executorEnv).
+get_spark() sets no master and no heap here, so spark-submit's --master
+and memory flags hold; the OPENBLAS/OMP clamps ship to executors via
+spark.executorEnv.
 """
 
 from __future__ import annotations
@@ -53,8 +53,9 @@ def main() -> None:
     )
     from sparkts.session import get_spark
 
-    # master=None → spark-submit owns it (local fallback for direct runs)
-    spark = get_spark(args.app_name, master=None)
+    # master="" → spark-submit owns the master and the heap (its default,
+    # local[*], covers direct runs)
+    spark = get_spark(args.app_name, master="")
     t0 = time.perf_counter()
 
     pages = spark.read.parquet(args.input)

@@ -871,25 +871,28 @@ def _arma_exact_loglik(x: np.ndarray, ar: np.ndarray, ma: np.ndarray,
     # P ← P + A P A', A ← A² — O(iters·r³) instead of the (I − T⊗T)
     # kron solve's O(r⁶), which dominated the AutoARIMA profile at
     # seasonal state dimensions (r ≈ 25 → a 625×625 solve per likelihood
-    # evaluation). Falls back to the exact solve if not converged (near
-    # unit-root T).
+    # evaluation). An explosive T (an AR root inside the unit circle) has
+    # no stationary P0: the iteration diverges, overflowing on the way, and
+    # returns -inf. Only an iteration that stays finite without converging
+    # (near unit-root T) falls back to the exact solve.
     P = RR.copy()
     A = T.copy()
-    for _ in range(60):
-        APA = A @ P @ A.T
-        P = P + APA
-        if not np.all(np.isfinite(P)):
-            return -np.inf, np.nan
-        if np.abs(APA).max() <= 1e-13 * (1.0 + np.abs(P).max()):
-            break
-        A = A @ A
-    else:
-        try:
-            vecP = np.linalg.solve(np.eye(r * r) - np.kron(T, T),
-                                   RR.reshape(-1))
-        except np.linalg.LinAlgError:
-            return -np.inf, np.nan
-        P = vecP.reshape(r, r)
+    with np.errstate(over="ignore", invalid="ignore"):
+        for _ in range(60):
+            APA = A @ P @ A.T
+            P = P + APA
+            if not np.all(np.isfinite(P)):
+                return -np.inf, np.nan
+            if np.abs(APA).max() <= 1e-13 * (1.0 + np.abs(P).max()):
+                break
+            A = A @ A
+        else:
+            try:
+                vecP = np.linalg.solve(np.eye(r * r) - np.kron(T, T),
+                                       RR.reshape(-1))
+            except np.linalg.LinAlgError:
+                return -np.inf, np.nan
+            P = vecP.reshape(r, r)
     if not np.all(np.isfinite(P)):
         return -np.inf, np.nan
     a = np.zeros(r)

@@ -132,9 +132,10 @@ def build_tiers(
 ) -> dict[str, DataFrame]:
     """Full cascade: raw → finest tier → each coarser tier from the previous.
 
-    Returned DataFrames are lazy; callers persist/write per tier (the
-    pipeline in ``jobs/tier_pipeline.py`` checkpoints each to parquet/Iceberg
-    with lineage so the raw scan happens once). ``extra_aggs`` (sum-
+    Returned DataFrames are lazy; callers persist/write per tier. The
+    persisted, resumable form of the same cascade is
+    ``sparkts.lineage.TierPipeline``, which commits each tier's day
+    partitions with lineage from one raw scan. ``extra_aggs`` (sum-
     decomposable) propagate through every tier.
     """
     tiers = tiers or list(TIERS)

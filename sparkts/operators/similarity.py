@@ -270,7 +270,10 @@ def ivf_assign_col(vec_col: str, centroids: np.ndarray) -> F.Column:
     boundary vectors resolve the same way in any engine that recomputes the
     assignment (FP summation order differs across engines; strict `<` on raw
     doubles would make the tie-break depend on the last ulp). Ties after
-    rounding go to the lower centroid index on every side."""
+    rounding go to the lower centroid index on every side.
+
+    A null vector, and a vector with a NaN component (every distance of
+    it is NaN), get NULL: they sit in no list, so no probe returns them."""
     v = F.col(vec_col)
     # r6: transform over one array-of-arrays literal + array_min/position
     # instead of a per-centroid when-chain. The when-chain embedded each
@@ -293,7 +296,8 @@ def ivf_assign_col(vec_col: str, centroids: np.ndarray) -> F.Column:
             9,
         ),
     )
-    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
+    nearest = F.array_position(dists, F.array_min(dists)) - 1
+    return F.when(~F.exists(v, F.isnan), nearest).cast("int")
 
 
 def ivf_ann_topk(

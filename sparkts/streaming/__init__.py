@@ -1,10 +1,7 @@
 from sparkts.streaming.rollup import (  # noqa: F401
     commit_batch,
-    commit_tier_batch,
     compact_tier_output,
-    read_tier_snapshot,
     read_tier_stream_output,
-    stream_cascade,
     stream_rollup,
     write_tier_stream,
 )

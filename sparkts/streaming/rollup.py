@@ -3,16 +3,15 @@
 The reference has no streaming surface (SURVEY.md §2.9) — this is the
 north-rule extension that makes the 1m base tier a *continuous* aggregate:
 ``readStream`` → event-time window + watermark → decomposable stats →
-``foreachBatch`` merge into the same parquet/Iceberg tier layout the batch
-cascade reads. Because every tier statistic is sum/min/max-decomposable
-(operators/rollup.py), a streaming 1m tier upgrades the whole cascade to
-incremental with no semantic change: 5m/1h/1d re-aggregate whatever 1m rows
-exist, batch- or stream-produced.
+``foreachBatch`` commit into a merge-on-read parquet sink. Because every
+tier statistic is sum/min/max-decomposable (operators/rollup.py), 5m/1h/1d
+follow from the streamed 1m tier with no semantic change: chain
+``rollup_cascade`` over ``read_tier_stream_output``.
 
 Late data: the watermark bounds state; rows later than the watermark are
-dropped by Spark (documented behavior). The batch backfill path
-(rollup_base over the raw table) remains the source of truth for replays —
-the lineage table records which bucket ranges came from which path.
+dropped by Spark (documented behavior). Batch tiers commit through
+``sparkts.lineage.TierPipeline``, and the batch backfill path (rollup_base
+over the raw table) remains the source of truth for replays.
 
 Sink layout and commit protocol (``<out>`` is a driver-visible path):
 
@@ -23,6 +22,11 @@ Sink layout and commit protocol (``<out>`` is a driver-visible path):
   ``sparkts.lineage._publish``, the same step that commits lineage);
 * ``floor/next_id.parquet`` — the lowest id the next stream writer may
   use, written by ``compact_tier_output`` the same way.
+
+Batch ids form one space: a writer commits micro-batch ``floor +
+checkpoint id``, and compaction folds every committed batch into
+``max(committed) + 1`` and moves the floor above it. Readers take the
+latest committed batch per (keys, bucket).
 
 Marker listing (``_committed``) and the floor read are plain file-system
 calls on the driver, and readers take the Spark schema from a committed
@@ -166,9 +170,9 @@ def write_tier_stream(
     that advances the watermark), and each commits.
 
     Id floor: checkpoint micro-batch counters restart at 0 with a fresh
-    checkpoint, and ``compact_tier_output`` consolidates history into a
-    high id, so committing raw counter ids would overwrite that
-    generation. The writer reads the floor file once, at start, on the
+    checkpoint, and ``compact_tier_output`` consolidates history into
+    ``max(committed) + 1``, so committing raw counter ids would overwrite
+    that generation. The writer reads the floor file once, at start, on the
     driver with pyarrow (no file yet means floor 0) and commits batch
     ``floor + batch_id``: replays within a run keep their exact ids, and a
     writer started after a compaction lands strictly above the
@@ -186,49 +190,6 @@ def write_tier_stream(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-#: batch publishes allocate generation ids at and above this base — a
-#: namespace disjoint from the streaming sink's ids (which come from the
-#: STREAM CHECKPOINT's micro-batch counter, not from the commits dir, and
-#: count up from 0), so a streaming writer sharing the directory can never
-#: reuse a batch generation's id and overwrite it
-BATCH_ID_BASE = 1 << 33
-
-
-def commit_tier_batch(df: DataFrame, out_path: str) -> int:
-    """Transactional BATCH publish of a tier table through the same
-    batch-id commit protocol the streaming sink uses (the parquet+marker
-    stand-in for an Iceberg snapshot commit, Iceberg jars being
-    unavailable offline): the new generation lands in ``data/batch=<id>``
-    first, the marker second, so a reader (``read_tier_snapshot``) sees the
-    PREVIOUS generation until the marker lands and never a torn write.
-    Batch and streaming writers can share one output directory: batch
-    generations live in the disjoint id namespace ≥ ``BATCH_ID_BASE``
-    (streaming micro-batch ids are checkpoint counters from 0, NOT
-    allocated from the commits dir, so "max committed + 1" alone would
-    collide with the stream's next micro-batch and be silently
-    overwritten). Under latest-wins merge-on-read a batch publish therefore
-    supersedes stream batches — snapshot-replaces-table semantics. A
-    listing error other than a missing ``commits`` directory propagates:
-    treating it as "nothing committed" would re-allocate ``BATCH_ID_BASE``
-    and overwrite the oldest generation. Returns the committed id."""
-    new_id = max((c for c in _committed(out_path) if c >= BATCH_ID_BASE),
-                 default=BATCH_ID_BASE - 1) + 1
-    commit_batch(df, new_id, out_path)
-    return new_id
-
-
-def read_tier_snapshot(spark, out_path: str) -> DataFrame:
-    """Snapshot read for batch-published generations: the HIGHEST
-    committed batch id replaces the table wholesale (Iceberg-snapshot
-    semantics), unlike ``read_tier_stream_output``'s per-bucket
-    latest-wins merge (streaming upsert semantics). Torn writes (data
-    without marker) stay invisible either way."""
-    committed = _committed(out_path)
-    if not committed:
-        raise ValueError(f"nothing committed under {out_path}")
-    return _read_batches(spark, out_path, [max(committed)]).drop("batch")
 
 
 def read_tier_stream_output(spark, out_path: str, key_cols: list[str]) -> DataFrame:
@@ -269,74 +230,18 @@ def compact_tier_output(spark, out_path: str, key_cols: list[str]) -> int:
     driver and renamed into place like a marker, and ``write_tier_stream``
     offsets every checkpoint id by it (fresh or resumed checkpoint alike).
 
-    Namespace discipline: stream generations (< BATCH_ID_BASE) and
-    batch-publish generations (≥ BATCH_ID_BASE) are compacted SEPARATELY.
-    Folding everything into max(committed)+1 would, whenever any batch
-    generation exists, land the consolidated id — and the floor — inside
-    the batch namespace, so later stream micro-batches would allocate
-    batch-namespace ids and a subsequent ``commit_tier_batch`` could
-    silently overwrite (or be overwritten by) a live stream writer.
-    Instead: the stream namespace consolidates into max(stream ids)+1
-    (always < BATCH_ID_BASE — enforced) and the floor stays inside the
-    stream namespace; the batch namespace needs no merge at all
-    (snapshot-replaces-table: the highest batch id IS the table), so
-    compaction simply retires the superseded batch generations. The
-    merged-read semantics are unchanged either way: latest-wins per bucket
-    still sees exactly the same values.
-
-    Returns the consolidated stream batch id (or, when only batch
-    generations exist, the surviving snapshot id)."""
+    Returns the consolidated batch id."""
     committed = _committed(out_path)
     if not committed:
         raise ValueError(f"nothing committed under {out_path}")
-
-    def gc(ids):
-        for b in ids:
-            os.remove(f"{out_path}/commits/batch={b}")
-            shutil.rmtree(f"{out_path}/data/batch={b}", ignore_errors=True)
-
-    stream_gens = [c for c in committed if c < BATCH_ID_BASE]
-    batch_gens = [c for c in committed if c >= BATCH_ID_BASE]
-    # batch namespace: highest id is the whole snapshot — older batch
-    # generations are pure garbage, retire them without a rewrite
-    if batch_gens:
-        gc(b for b in batch_gens if b != max(batch_gens))
-    if not stream_gens:
-        return max(batch_gens)
-    new_id = max(stream_gens) + 1
-    if new_id >= BATCH_ID_BASE:
-        raise ValueError(
-            f"stream id namespace exhausted under {out_path}: "
-            f"consolidated id {new_id} would enter the batch namespace")
-    # merged view of the STREAM generations only (a committed batch
-    # snapshot keeps shadowing per-bucket under latest-wins regardless)
-    merged = _latest_wins(_read_batches(spark, out_path, stream_gens), key_cols)
+    new_id = max(committed) + 1
+    merged = _latest_wins(_read_batches(spark, out_path, committed), key_cols)
     commit_batch(merged, new_id, out_path)
-    # GC superseded stream generations only after the marker landed
-    gc(stream_gens)
-    # id floor for the next stream writer (see write_tier_stream); stays
-    # strictly inside the stream namespace
+    # GC the folded batches only after the consolidated marker landed
+    for b in committed:
+        os.remove(f"{out_path}/commits/batch={b}")
+        shutil.rmtree(f"{out_path}/data/batch={b}", ignore_errors=True)
     floor = pa.table({"next_id": pa.array([new_id + 1], pa.int64())})
     _publish(f"{out_path}/floor/{_FLOOR_FILE}",
              lambda tmp: pq.write_table(floor, tmp))
     return new_id
-
-
-def stream_cascade(spark, out_path: str, key_cols: list[str],
-                   tiers: tuple[str, ...] = ("5m", "1h", "1d")) -> dict:
-    """Upgrade the streaming 1m sink to the FULL tier cascade: merge-on-read
-    the streamed 1m tier, then chain the batch cascade operator coarser tier
-    by coarser tier (5m from 1m, 1h from 5m, …) exactly like
-    ``build_tiers``. Because every tier statistic is decomposable, the
-    result is identical to a batch cascade over the same raw rows — the
-    streaming-equals-batch invariance extends to every tier, and a restart
-    of the 1m stream (checkpointed) transparently refreshes all of them."""
-    from sparkts.operators.rollup import rollup_cascade
-
-    base = read_tier_stream_output(spark, out_path, key_cols)
-    out = {"1m": base}
-    prev = base
-    for t in tiers:
-        prev = rollup_cascade(prev, key_cols, t)
-        out[t] = prev
-    return out

@@ -65,3 +65,17 @@ def test_lloyd_kmeans_centroid_loop_bit_equal():
             if pts.shape[0]:
                 ref_cent[j] = pts.mean(axis=0)
     assert np.array_equal(lloyd_kmeans(sample, 8, 10, 42), ref_cent)
+
+
+def test_null_and_nan_vectors_sit_in_no_list(spark):
+    centroids = np.array([[0.0, 1.0], [1.0, 0.0]])
+    df = spark.createDataFrame(
+        [(0, [0.1, 1.0]), (1, [0.0, 0.9]), (2, [1.0, 0.1]), (3, None),
+         (4, [float("nan"), 1.0])],
+        "vec_id long, embedding array<double>")
+    lists = dict(df.select("vec_id", ivf_assign_col("embedding", centroids))
+                 .collect())
+    assert lists == {0: 0, 1: 0, 2: 1, 3: None, 4: None}
+    top = ivf_ann_topk(df, [0.1, 1.0], centroids, k=4, nprobe=2).toPandas()
+    assert sorted(top["vec_id"]) == [0, 1, 2]
+    assert top["cos_sim"].notna().all()

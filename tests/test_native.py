@@ -8,6 +8,8 @@ rows-only-graded search likelihoods).
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import pytest
 
@@ -109,6 +111,28 @@ def test_kalman_loglik_matches_numpy():
             assert abs(s2_c - s2_p) <= 1e-9 * (1 + abs(s2_p))
             checked += 1
     assert checked > 100
+
+
+def test_kalman_explosive_ar_returns_neg_inf_without_warning():
+    """An AR polynomial with a root inside the unit circle (modulus 0.967
+    here) has no stationary P0: the numpy doubling iteration diverges and
+    the likelihood is -inf, with the expected overflow kept silent."""
+    arp = np.array([1.0, 0.4359877205555248, -0.3271055714558708,
+                    -0.0061531576090160245, -0.13450904950055914,
+                    0.10091719887616195, -0.09328358119399512])
+    map_ = np.array([1.0, 0.13762726841239503, 0.17380178054739803,
+                     0.14666041980947886, 0.020184472962593684,
+                     0.02548984209871631])
+    assert np.abs(np.roots(arp[::-1])).min() < 1
+    x = np.random.default_rng(0).normal(0, 1, 253)
+    saved, nat.LIB = nat.LIB, None
+    try:
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            ll, s2 = ar._arma_exact_loglik(x, arp, map_, exact_cap=80)
+    finally:
+        nat.LIB = saved
+    assert ll == -np.inf and np.isnan(s2)
 
 
 def test_autoets_selection_unchanged_by_native():

@@ -89,3 +89,29 @@ def test_empty_master_leaves_master_and_heap_to_spark_submit(monkeypatch, conf):
     assert "master" not in conf
     assert "spark.driver.memory" not in conf
     assert "spark.driver.extraJavaOptions" not in conf
+
+
+def test_tier_pipeline_job_leaves_master_to_spark_submit(monkeypatch):
+    import importlib.util
+    import sys
+
+    path = os.path.join(os.path.dirname(__file__), "..", "jobs",
+                        "tier_pipeline.py")
+    spec = importlib.util.spec_from_file_location("tier_pipeline_job", path)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    seen = {}
+
+    class Stop(Exception):
+        pass
+
+    def fake_get_spark(app_name, master=None, **_kw):
+        seen["master"] = master
+        raise Stop
+
+    monkeypatch.setattr(session, "get_spark", fake_get_spark)
+    monkeypatch.setattr(sys, "argv", ["tier_pipeline.py", "--input", "in",
+                                      "--out", "out"])
+    with pytest.raises(Stop):
+        job.main()
+    assert seen == {"master": ""}

@@ -167,48 +167,6 @@ def test_stream_writer_after_compaction_respects_floor(spark, events_dir,
     pd.testing.assert_frame_equal(got, want, check_exact=False, rtol=1e-12)
 
 
-def test_compaction_keeps_stream_floor_below_batch_namespace(
-        spark, events_dir, tmp_path_factory):
-    """r6 regression (round-5 ADVICE): compacting a directory that holds
-    BOTH stream micro-batches and a batch publish must keep the
-    consolidated stream id and the floor BELOW BATCH_ID_BASE — otherwise
-    later stream writers allocate batch-namespace ids and a subsequent
-    commit_tier_batch can collide with a live stream writer. Batch
-    generations are retired to the newest snapshot without a rewrite."""
-    import os
-
-    from pyspark.sql import functions as F
-    from sparkts.streaming.rollup import BATCH_ID_BASE
-    from sparkts.streaming import (commit_batch,
-                                   commit_tier_batch, compact_tier_output,
-                                   read_tier_snapshot)
-
-    out = str(tmp_path_factory.mktemp("tier_ns"))
-    raw = spark.read.parquet(events_dir)
-    tier = rollup_base(raw, "ts", ["event_type"], "value", "1m")
-    commit_batch(tier.where(F.dayofmonth("bucket") <= 15), 0, out)
-    commit_batch(tier.where(F.dayofmonth("bucket") > 15), 1, out)
-    snap0 = commit_tier_batch(tier.limit(5), out)
-    snap1 = commit_tier_batch(tier.limit(7), out)
-    assert snap1 == snap0 + 1
-
-    new_id = compact_tier_output(spark, out, ["event_type"])
-    # consolidated stream id stays in the stream namespace...
-    assert new_id == 2 and new_id < BATCH_ID_BASE
-    # ...the floor does too...
-    floor = int(spark.read.parquet(f"{out}/floor")
-                .agg(F.max("next_id")).collect()[0][0])
-    assert floor == new_id + 1 and floor < BATCH_ID_BASE
-    # ...the older batch snapshot is retired, the newest survives...
-    dirs = sorted(int(d.split("=")[1]) for d in os.listdir(f"{out}/data"))
-    assert dirs == [new_id, snap1]
-    # ...and a post-compaction batch publish allocates a FRESH id above
-    # the surviving snapshot (no collision with stream ids)
-    snap2 = commit_tier_batch(tier.limit(3), out)
-    assert snap2 == snap1 + 1
-    assert read_tier_snapshot(spark, out).count() == 3
-
-
 def test_uncommitted_orphan_batch_is_invisible(spark, events_dir,
                                                tmp_path_factory):
     """A crash BETWEEN the data write and the marker write leaves an
@@ -298,8 +256,7 @@ def test_stream_cascade_equals_batch_and_resumes(spark, events_dir,
     streaming cascade + end-to-end restart)."""
     from pyspark.sql import functions as F
 
-    from sparkts.operators import build_tiers
-    from sparkts.streaming import stream_cascade
+    from sparkts.operators import build_tiers, rollup_cascade
 
     out = str(tmp_path_factory.mktemp("casc_out"))
     ckpt = str(tmp_path_factory.mktemp("casc_ckpt"))
@@ -319,7 +276,9 @@ def test_stream_cascade_equals_batch_and_resumes(spark, events_dir,
         q.awaitTermination(180)
 
     def compare(raw):
-        got = stream_cascade(spark, out, ["event_type"])
+        got = {"1m": read_tier_stream_output(spark, out, ["event_type"])}
+        for coarse, fine in (("5m", "1m"), ("1h", "5m"), ("1d", "1h")):
+            got[coarse] = rollup_cascade(got[fine], ["event_type"], coarse)
         want = build_tiers(raw, "ts", ["event_type"], "value")
         cols = ["event_type", "bucket", "n_rows", "v_sum", "v_min", "v_max"]
         for t in ("1m", "5m", "1h", "1d"):
@@ -336,60 +295,6 @@ def test_stream_cascade_equals_batch_and_resumes(spark, events_dir,
     second.repartition(2).write.mode("append").parquet(src)
     run_stream()
     compare(full)
-
-
-def test_batch_transactional_commit(spark, events_dir, tmp_path_factory):
-    """commit_tier_batch publishes generations atomically: a reader sees
-    the previous generation until the marker lands; a torn write (data
-    directory without marker) stays invisible; generations interleave
-    with the streaming sink's ids."""
-    from sparkts.streaming import commit_tier_batch, read_tier_snapshot
-    from sparkts.streaming.rollup import BATCH_ID_BASE, commit_batch
-
-    out = str(tmp_path_factory.mktemp("txn")) + "/tier"
-    ev = spark.read.parquet(events_dir)
-    gen0 = rollup_base(ev, "ts", ["event_type"], "value", "1h")
-    assert commit_tier_batch(gen0, out) == BATCH_ID_BASE
-    n0 = read_tier_snapshot(spark, out).count()
-    assert n0 == gen0.count()
-
-    # new generation with an extra filter — replaces the view atomically
-    gen1 = gen0.where("n_rows > 1")
-    assert commit_tier_batch(gen1, out) == BATCH_ID_BASE + 1
-    assert read_tier_snapshot(spark, out).count() == gen1.count() < n0
-
-    # torn write: data lands but no marker → invisible
-    gen0.write.mode("overwrite").parquet(f"{out}/data/batch={BATCH_ID_BASE + 7}")
-    assert read_tier_snapshot(spark, out).count() == gen1.count()
-    # the next allocation skips PAST committed ids only (the orphan id is
-    # overwritten territory, not committed)
-    assert commit_tier_batch(gen0, out) == BATCH_ID_BASE + 2
-    assert read_tier_snapshot(spark, out).count() == n0
-
-
-def test_batch_publish_ids_disjoint_from_stream_ids(
-        spark, events_dir, tmp_path_factory):
-    """Regression: streaming micro-batch ids come from the STREAM
-    CHECKPOINT (counting 0, 1, 2, …), not from the commits dir — a batch
-    publisher allocating 'max committed + 1' would hand out the stream's
-    next id and the following micro-batch would silently overwrite the
-    batch generation. Batch publishes must land in the disjoint
-    ≥ BATCH_ID_BASE namespace."""
-    from sparkts.streaming import commit_tier_batch, read_tier_snapshot
-    from sparkts.streaming.rollup import BATCH_ID_BASE, commit_batch
-
-    out = str(tmp_path_factory.mktemp("mixed")) + "/tier"
-    ev = spark.read.parquet(events_dir)
-    tier = rollup_base(ev, "ts", ["event_type"], "value", "1h")
-    # a stream committed micro-batches 0 and 1 (checkpoint-derived ids)
-    commit_batch(tier.limit(3), 0, out)
-    commit_batch(tier.limit(5), 1, out)
-    gen = commit_tier_batch(tier, out)
-    assert gen >= BATCH_ID_BASE
-    # the stream's NEXT micro-batch (id 2) replays — it must not clobber
-    # the batch generation, and the snapshot must still be the publish
-    commit_batch(tier.limit(4), 2, out)
-    assert read_tier_snapshot(spark, out).count() == tier.count()
 
 
 def _jobs_started(spark, run) -> list:
