@@ -12,7 +12,7 @@ with zipfile.ZipFile("dist/sparkts.zip", "w", zipfile.ZIP_DEFLATED) as z:
         if "__pycache__" in root:
             continue
         for f in files:
-            if f.endswith(".py"):
+            if f.endswith((".py", ".c")):  # .c: the native kernels' source
                 p = os.path.join(root, f)
                 z.write(p, p)
 print("wrote dist/sparkts.zip")

@@ -163,11 +163,6 @@ def extract_text(pages: DataFrame) -> DataFrame:
     return pages.withColumn("extracted_text", extracted)
 
 
-def domain_of(url_col: str = "url") -> F.Column:
-    """Series key: registrable host parsed from the url (built-in, no UDF)."""
-    return F.parse_url(F.col(url_col), F.lit("HOST")).alias("domain")
-
-
 # ---------------------------------------------------------------------------
 # panel fixtures (F2, F4, F5) — statsforecast-shaped long panels
 # ---------------------------------------------------------------------------

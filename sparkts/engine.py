@@ -25,12 +25,11 @@ Scale design notes
 
 from __future__ import annotations
 
-import os
 from typing import Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sparkts.kernels.base import Model
 from sparkts.plans.schema import (
@@ -56,15 +55,12 @@ def _kernel_parallelism(df: DataFrame) -> tuple[int, int]:
     partition ~1.7× the mean): ×2 cut the wall 5.4→4.2 s / 4.5→3.3 s
     while the 2 000-series cheap-model cv was flat (1.39 vs 1.38 s);
     ×4 helped the heavy legs more but cost the cheap cv ~20% in per-task
-    overhead, so ×2 is the default. Buckets stay at 8× parallelism
-    (unchanged absolute count: the number of Python grouped-map calls is
-    the number of non-empty buckets, so more partitions don't add
-    boundary crossings). ``SPARKTS_KERNEL_BUCKETS`` overrides the bucket
-    count for deployments whose series-count/core ratio is extreme."""
-    sc = df.sparkSession.sparkContext
-    n = sc.defaultParallelism * 2
-    b = int(os.environ.get("SPARKTS_KERNEL_BUCKETS", "0")) or n * 4
-    return n, b
+    overhead, so ×2 is the default. Buckets are always 4× the partitions
+    (8× parallelism; unchanged absolute count: the number of Python
+    grouped-map calls is the number of non-empty buckets, so more
+    partitions don't add boundary crossings)."""
+    n = df.sparkSession.sparkContext.defaultParallelism * 2
+    return n, n * 4
 
 
 def _apply_by_series(df: DataFrame, id_col: str, kernel, schema) -> DataFrame:

@@ -2,7 +2,9 @@
 
 ``_native.c`` holds bit-exact C transcriptions of the interpreted scalar
 recursions that dominate the model-search profiles (ETS state recursion,
-ARMA MA-feedback filter).  The shared library is compiled once per machine
+ARMA MA-feedback filter).  The source is read through the package loader
+(``pkgutil.get_data``), so a ``--py-files`` zip that carries ``_native.c``
+works like a source tree.  The shared library is compiled once per machine
 into a per-user temp cache keyed on the source hash; every executor that
 imports the package finds (or builds) the same cached ``.so``.  Concurrent
 builders compile to a pid-suffixed temp file and ``os.replace`` it into
@@ -17,14 +19,13 @@ from __future__ import annotations
 import ctypes
 import hashlib
 import os
+import pkgutil
 import shutil
 import subprocess
 import tempfile
 
 import numpy as np
 from numpy.ctypeslib import ndpointer
-
-_SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_native.c")
 
 _f64 = ndpointer(dtype=np.float64, flags="C_CONTIGUOUS")
 _i64 = ndpointer(dtype=np.int64, flags="C_CONTIGUOUS")
@@ -34,8 +35,7 @@ def _load():
     if os.environ.get("SPARKTS_NO_NATIVE"):
         return None
     try:
-        with open(_SRC, "rb") as fh:
-            src = fh.read()
+        src = pkgutil.get_data(__package__, "_native.c")
         tag = hashlib.md5(src).hexdigest()[:12]
         cache = os.path.join(
             tempfile.gettempdir(), f"sparkts-native-{os.getuid()}")
@@ -48,11 +48,12 @@ def _load():
                 return None
             tmp = f"{so}.tmp{os.getpid()}"
             # -ffp-contract=off / -fno-fast-math: no FMA fusion or FP
-            # reordering — required for bit-exactness with CPython floats
+            # reordering — required for bit-exactness with CPython floats.
+            # The source goes in on stdin (`-x c -`): it may live in a zip.
             subprocess.run(
                 [cc, "-O2", "-fPIC", "-shared", "-ffp-contract=off",
-                 "-fno-fast-math", "-o", tmp, _SRC],
-                check=True, capture_output=True, timeout=120)
+                 "-fno-fast-math", "-o", tmp, "-x", "c", "-"],
+                input=src, check=True, capture_output=True, timeout=120)
             os.replace(tmp, so)
         lib = ctypes.CDLL(so)
         # raw-pointer prototypes: the kernels are called tens of thousands

@@ -198,13 +198,3 @@ class MSTL(Model):
             sigma = residual_sigma(dec["remainder"], max(y.size - 1, 1))
             add_intervals(res, np.full(h, sigma), level)
         return res
-
-
-def mstl_decomposition_frame(y: np.ndarray, periods: list[int]) -> dict:
-    """Component columns for the feature-engineering operator (reference
-    feature_engineering.py:19-69): trend + one seasonal column per period."""
-    dec = mstl(y, periods)
-    out = {"trend": dec["trend"]}
-    for p, s in dec["seasonals"].items():
-        out[f"seasonal{p}" if len(dec["seasonals"]) > 1 else "seasonal"] = s
-    return out

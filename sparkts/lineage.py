@@ -225,15 +225,14 @@ class TierPipeline:
         ts_col: str,
         value_col: str,
         run_id: str = "run0",
-        tiers: list[str] | None = None,
         extra_aggs: dict | None = None,
     ) -> dict[str, int]:
-        """Build/extend all tiers; returns {tier: n_new_day_partitions}.
+        """Build/extend all ``TIERS``; returns {tier: n_new_day_partitions}.
 
         ``extra_aggs`` (sum-decomposable columns, e.g. the extraction-
         invariant counter ``{'n_bad': F.sum('bad')}``) ride the base
         rollup and are summed into every coarser tier."""
-        tiers = sorted(tiers or list(TIERS), key=lambda t: TIERS[t])
+        tiers = sorted(TIERS, key=TIERS.get)
         finest = tiers[0]
         manifest = self.lineage.completed()
         done = {t: manifest.get(f"tier_{t}", set()) for t in tiers}

@@ -9,7 +9,9 @@ makes the cascade cheap at 100 TB: raw data is scanned exactly once (for the
 1m base tier) and every coarser tier is built from 1m buckets, never from raw
 rows. ``build_tiers`` chains the tiers (each from the one below);
 ``sparkts.lineage.TierPipeline`` derives all coarser tiers from the 1m slice
-in one aggregation. Both merge rows with the same ``merge_aggs``.
+in one aggregation. The tier row is defined once, here: every base rollup
+(batch, salted, streamed) aggregates raw rows with ``stat_aggs``, and every
+merge of finer rows uses ``merge_aggs``.
 
 Unlike the reference's "discard incomplete trailing chunk" policy
 (models.py:2277 ``trim``), partial tail buckets are KEPT and flagged via the
@@ -62,6 +64,19 @@ def bucket_sql(ts_col: str, width_s: int) -> str:
     return f"timestamp_seconds({epoch} - {epoch} % {int(width_s)})"
 
 
+def stat_aggs(value_col: str) -> list[F.Column]:
+    """The ``STAT_COLS`` aggregates of ``value_col`` cast to double: count,
+    sum, min, max and sum of squares — the one raw→stats list."""
+    v = F.col(value_col).cast("double")
+    return [
+        F.count(v).alias("n_rows"),
+        F.sum(v).alias("v_sum"),
+        F.min(v).alias("v_min"),
+        F.max(v).alias("v_max"),
+        F.sum(v * v).alias("v_sumsq"),
+    ]
+
+
 def rollup_base(
     df: DataFrame,
     ts_col: str,
@@ -70,23 +85,15 @@ def rollup_base(
     tier: str = "1m",
     extra_aggs: dict[str, F.Column] | None = None,
 ) -> DataFrame:
-    """Base tier: raw rows → (keys, bucket, count/sum/min/max/sumsq).
+    """Base tier: raw rows → (keys, bucket, ``stat_aggs`` of the value).
 
     ``extra_aggs`` rides extra *decomposable* aggregates (e.g. a data-quality
     mismatch count) through the same single scan — at 100 TB the raw scan is
     the dominant cost, so every per-row check must share it rather than
     re-scan."""
     width = TIERS[tier]
-    v = F.col(value_col).cast("double")
-    aggs = [
-        F.count(v).alias("n_rows"),
-        F.sum(v).alias("v_sum"),
-        F.min(v).alias("v_min"),
-        F.max(v).alias("v_max"),
-        F.sum(v * v).alias("v_sumsq"),
-    ]
-    for name, col in (extra_aggs or {}).items():
-        aggs.append(col.alias(name))
+    aggs = stat_aggs(value_col) + [
+        col.alias(name) for name, col in (extra_aggs or {}).items()]
     return df.groupBy(*key_cols, bucket_ts(ts_col, width).alias("bucket")).agg(*aggs)
 
 
@@ -178,6 +185,16 @@ def apply_retention(
     return out
 
 
+def _activity_cols() -> list[F.Column]:
+    """(domain, warc_ts, bytes) of a pages frame: the projection of
+    ``crawl_activity`` and ``crawl_activity_checked``."""
+    return [
+        F.parse_url(F.col("url"), F.lit("HOST")).alias("domain"),
+        F.col("warc_ts"),
+        F.length("html").cast("double").alias("bytes"),
+    ]
+
+
 def crawl_activity(pages: DataFrame) -> DataFrame:
     """North-star series derivation: pages → (domain, warc_ts, bytes).
 
@@ -187,11 +204,7 @@ def crawl_activity(pages: DataFrame) -> DataFrame:
     caller ran ``extract_text`` separately, Catalyst prunes ``text`` from the
     scan entirely.
     """
-    return pages.select(
-        F.parse_url(F.col("url"), F.lit("HOST")).alias("domain"),
-        F.col("warc_ts"),
-        F.length("html").cast("double").alias("bytes"),
-    )
+    return pages.select(*_activity_cols())
 
 
 def crawl_activity_checked(pages: DataFrame, mismatch: F.Column) -> DataFrame:
@@ -199,9 +212,4 @@ def crawl_activity_checked(pages: DataFrame, mismatch: F.Column) -> DataFrame:
     so the invariant check and the base rollup share ONE raw scan — at
     100 TB the scan dominates, so the quality check must not re-read the
     corpus. Feed to ``build_tiers(extra_aggs={'n_bad': F.sum('bad')})``."""
-    return pages.select(
-        F.parse_url(F.col("url"), F.lit("HOST")).alias("domain"),
-        F.col("warc_ts"),
-        F.length("html").cast("double").alias("bytes"),
-        mismatch.cast("long").alias("bad"),
-    )
+    return pages.select(*_activity_cols(), mismatch.cast("long").alias("bad"))

@@ -272,8 +272,9 @@ def ivf_assign_col(vec_col: str, centroids: np.ndarray) -> F.Column:
     doubles would make the tie-break depend on the last ulp). Ties after
     rounding go to the lower centroid index on every side.
 
-    A null vector, and a vector with a NaN component (every distance of
-    it is NaN), get NULL: they sit in no list, so no probe returns them."""
+    A null vector, and a vector with a non-finite distance (a NaN or inf
+    component, or one whose squared distance overflows), get NULL: they
+    sit in no list, so no probe returns them."""
     v = F.col(vec_col)
     # r6: transform over one array-of-arrays literal + array_min/position
     # instead of a per-centroid when-chain. The when-chain embedded each
@@ -297,7 +298,8 @@ def ivf_assign_col(vec_col: str, centroids: np.ndarray) -> F.Column:
         ),
     )
     nearest = F.array_position(dists, F.array_min(dists)) - 1
-    return F.when(~F.exists(v, F.isnan), nearest).cast("int")
+    # NaN sorts above +inf in Spark, so `< inf` fails for NaN and inf alike
+    return F.when(F.forall(dists, lambda d: d < float("inf")), nearest).cast("int")
 
 
 def ivf_ann_topk(

@@ -8,10 +8,11 @@ enough that even its *partial* rows overwhelm one reducer (e.g. a crawl
 burst producing 10⁸ events in one domain-minute across thousands of map
 tasks), the standard remedy is salting: aggregate on (keys, salt) first so
 the hot cell's load spreads over ``n_salts`` reducers, then merge the salted
-partials. All tier statistics are decomposable (operators/rollup.py), so
-the two-stage result is bit-identical to the direct aggregation — tested.
+partials: ``stat_aggs`` then ``merge_aggs`` (operators/rollup.py). All tier
+statistics are decomposable, so the two-stage result is bit-identical to
+the direct aggregation — tested.
 
-Salt derivation is deterministic (xxhash64 of a a stable row attribute, not
+Salt derivation is deterministic (xxhash64 of a stable row attribute, not
 rand()) so retries/speculative tasks stay idempotent.
 """
 
@@ -19,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from sparkts.operators.rollup import TIERS, bucket_ts
+from sparkts.operators.rollup import TIERS, bucket_ts, merge_aggs, stat_aggs
 
 
 def salted_rollup_base(
@@ -35,29 +36,13 @@ def salted_rollup_base(
     shuffle. ``salt_source`` is a column whose hash spreads the hot cell
     (defaults to the raw timestamp so rows of one hot bucket still spread)."""
     width = TIERS[tier]
-    v = F.col(value_col).cast("double")
     src = F.col(salt_source) if salt_source else F.col(ts_col).cast("string")
     salt = F.pmod(F.xxhash64(src), F.lit(n_salts)).alias("__salt")
     partial = (
         df.groupBy(*key_cols, bucket_ts(ts_col, width).alias("bucket"), salt)
-        .agg(
-            F.count(v).alias("n_rows"),
-            F.sum(v).alias("v_sum"),
-            F.min(v).alias("v_min"),
-            F.max(v).alias("v_max"),
-            F.sum(v * v).alias("v_sumsq"),
-        )
+        .agg(*stat_aggs(value_col))
     )
-    return (
-        partial.groupBy(*key_cols, "bucket")
-        .agg(
-            F.sum("n_rows").alias("n_rows"),
-            F.sum("v_sum").alias("v_sum"),
-            F.min("v_min").alias("v_min"),
-            F.max("v_max").alias("v_max"),
-            F.sum("v_sumsq").alias("v_sumsq"),
-        )
-    )
+    return partial.groupBy(*key_cols, "bucket").agg(*merge_aggs())
 
 
 def key_skew_profile(df: DataFrame, key_cols: list[str], top_n: int = 20) -> DataFrame:

@@ -3,10 +3,11 @@
 The reference has no streaming surface (SURVEY.md §2.9) — this is the
 north-rule extension that makes the 1m base tier a *continuous* aggregate:
 ``readStream`` → event-time window + watermark → decomposable stats →
-``foreachBatch`` commit into a merge-on-read parquet sink. Because every
-tier statistic is sum/min/max-decomposable (operators/rollup.py), 5m/1h/1d
-follow from the streamed 1m tier with no semantic change: chain
-``rollup_cascade`` over ``read_tier_stream_output``.
+``foreachBatch`` commit into a merge-on-read parquet sink. The stats are
+the batch tier's ``stat_aggs`` (operators/rollup.py), and all of them are
+sum/min/max-decomposable, so 5m/1h/1d follow from the streamed 1m tier
+with no semantic change: chain ``rollup_cascade`` over
+``read_tier_stream_output``.
 
 Late data: the watermark bounds state; rows later than the watermark are
 dropped by Spark (documented behavior). Batch tiers commit through
@@ -45,7 +46,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
 from sparkts.lineage import _publish, _spark_schema
-from sparkts.operators.rollup import TIERS
+from sparkts.operators.rollup import STAT_COLS, TIERS, stat_aggs
 
 #: file under ``<out>/floor`` that holds the next stream writer's id floor
 _FLOOR_FILE = "next_id.parquet"
@@ -59,25 +60,18 @@ def stream_rollup(
     tier: str = "1m",
     watermark: str = "10 minutes",
 ) -> DataFrame:
-    """Streaming base tier: event-time tumbling window of ``tier`` width
-    with a late-data watermark; emits the same schema as rollup_base
-    (keys, bucket, n_rows/v_sum/v_min/v_max/v_sumsq)."""
+    """Streaming base tier: ``rollup_base``'s ``stat_aggs`` and schema over
+    an event-time tumbling window of ``tier`` width with a late-data
+    watermark (a window on the event-time column, not ``bucket_ts``, so
+    the watermark can evict state)."""
     width = TIERS[tier]
-    v = F.col(value_col).cast("double")
     ts = F.col(ts_col).cast("timestamp")
     return (
         stream_df.withColumn("__ts", ts)
         .withWatermark("__ts", watermark)
         .groupBy(*key_cols, F.window("__ts", f"{width} seconds").alias("w"))
-        .agg(
-            F.count(v).alias("n_rows"),
-            F.sum(v).alias("v_sum"),
-            F.min(v).alias("v_min"),
-            F.max(v).alias("v_max"),
-            F.sum(v * v).alias("v_sumsq"),
-        )
-        .select(*key_cols, F.col("w.start").alias("bucket"),
-                "n_rows", "v_sum", "v_min", "v_max", "v_sumsq")
+        .agg(*stat_aggs(value_col))
+        .select(*key_cols, F.col("w.start").alias("bucket"), *STAT_COLS)
     )
 
 

@@ -178,6 +178,8 @@ def test_metrics_table_and_lineage_log(spark, panel_df, tmp_path):
     assert mt["SeasonalNaive"]["forecast_seconds"] > 0
     assert mt["FailingModel"]["fallbacks"] == n_series
     assert mt["SeasonalNaive"]["fallbacks"] == 0
+    # no argument: the active session
+    assert eng.metrics_table().collect() == eng.metrics_table(spark).collect()
     store = LineageStore(spark, str(tmp_path / "pipe"))
     eng.log_metrics(store, stage="bench", run_id="r5")
     got = {r["part_id"]: r for r in store.read().collect()}

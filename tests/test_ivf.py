@@ -71,11 +71,12 @@ def test_null_and_nan_vectors_sit_in_no_list(spark):
     centroids = np.array([[0.0, 1.0], [1.0, 0.0]])
     df = spark.createDataFrame(
         [(0, [0.1, 1.0]), (1, [0.0, 0.9]), (2, [1.0, 0.1]), (3, None),
-         (4, [float("nan"), 1.0])],
+         (4, [float("nan"), 1.0]), (5, [float("inf"), 1.0]),
+         (6, [1e200, 1.0])],
         "vec_id long, embedding array<double>")
     lists = dict(df.select("vec_id", ivf_assign_col("embedding", centroids))
                  .collect())
-    assert lists == {0: 0, 1: 0, 2: 1, 3: None, 4: None}
+    assert lists == {0: 0, 1: 0, 2: 1, 3: None, 4: None, 5: None, 6: None}
     top = ivf_ann_topk(df, [0.1, 1.0], centroids, k=4, nprobe=2).toPandas()
     assert sorted(top["vec_id"]) == [0, 1, 2]
     assert top["cos_sim"].notna().all()

@@ -52,19 +52,25 @@ def _spark_submit() -> str | None:
     return cand if os.path.exists(cand) else None
 
 
+def _zip_package(zpath) -> None:
+    """The package as ``jobs/package.sh`` ships it: its ``.py`` files and
+    the native kernels' ``.c`` source."""
+    with zipfile.ZipFile(zpath, "w") as z:
+        for root, dirs, files in os.walk(os.path.join(REPO, "sparkts")):
+            dirs[:] = [d for d in dirs if d != "__pycache__"]
+            for f in files:
+                if f.endswith((".py", ".c")):
+                    p = os.path.join(root, f)
+                    z.write(p, os.path.relpath(p, REPO))
+
+
 @pytest.mark.skipif(_spark_submit() is None, reason="no spark-submit")
 @pytest.mark.skipif(
     not os.path.exists("/root/testdata/sf0.001/events.parquet"),
     reason="driver testdata absent")
 def test_package_ships_via_spark_submit_py_files(tmp_path):
     zpath = tmp_path / "sparkts.zip"
-    with zipfile.ZipFile(zpath, "w") as z:
-        for root, dirs, files in os.walk(os.path.join(REPO, "sparkts")):
-            dirs[:] = [d for d in dirs if d != "__pycache__"]
-            for f in files:
-                if f.endswith(".py"):
-                    p = os.path.join(root, f)
-                    z.write(p, os.path.relpath(p, REPO))
+    _zip_package(zpath)
     job = tmp_path / "job.py"
     job.write_text(_JOB)
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
@@ -80,3 +86,27 @@ def test_package_ships_via_spark_submit_py_files(tmp_path):
     res = json.loads(out.stdout.strip().splitlines()[-1])
     assert res["tier_rows"] > 0
     assert res["forecast_rows"] == res["n_ids"] * 6
+
+
+@pytest.mark.skipif(
+    not any(shutil.which(c) for c in ("cc", "gcc", "clang")),
+    reason="no C compiler")
+def test_native_kernels_load_from_zip(tmp_path):
+    """An executor that imports the package from the shipped zip builds and
+    loads the native kernels: the C source is read out of the zip and
+    compiled into a fresh per-user cache (TMPDIR), no JVM involved."""
+    zpath = tmp_path / "sparkts.zip"
+    _zip_package(zpath)
+    probe = (
+        "import sys; sys.path.insert(0, sys.argv[1])\n"
+        "from sparkts.kernels import _native\n"
+        "assert _native.__file__.startswith(sys.argv[1]), _native.__file__\n"
+        "print(_native.LIB is not None)\n")
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("PYTHONPATH", "SPARKTS_NO_NATIVE")}
+    env["TMPDIR"] = str(tmp_path)
+    out = subprocess.run(
+        [sys.executable, "-c", probe, str(zpath)], capture_output=True,
+        text=True, timeout=300, cwd=tmp_path, env=env)
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split() == ["True"]
