@@ -2,41 +2,53 @@
 
 The reference's flagship entry point is the *stateless* ``forecast`` path
 (fit + predict inside one kernel call per series, reference core.py:144-244,
-chosen for memory efficiency core.py:894-899). That maps 1:1 onto Spark:
+chosen for memory efficiency core.py:894-899). Every method maps onto one
+Spark shape:
 
-    panel df ──repartition(id)──▶ applyInPandas(kernel, schema) ──▶ wide df
+    panel df ──repartition(pmod(xxhash64(id), B))──▶ applyInPandas(bucket) ──▶ wide df
 
-Exactly one shuffle; the kernel is pure numpy over Arrow batches. The same
-shape implements ``cross_validation`` (rolling-origin backtest, reference
+One exchange on a hash bucket of the series key, then one Python call per
+bucket. Inside that call the per-series skeleton (``_series_batch``) groups
+the bucket's rows by id, sorts each series by time once, hands each series
+to the method's ``series_fn`` and builds one output frame for the bucket.
+Every ``series_fn`` runs its models through one model-call step
+(``_ModelStep``), which owns the timing, the fallback rule and the
+mean/lo/hi column layout. The exog paths cogroup the same buckets
+(``cogroup().applyInPandas``). The same shape
+implements ``cross_validation`` (rolling-origin backtest, reference
 core.py:246-383) and ``fitted_values`` (in-sample predictions, reference
 core.py:1095-1120).
 
 Scale design notes
 ------------------
-* One exchange on the series key; everything else is kernel-local. With tiers
-  bucketed/partitioned by the same key upstream, AQE elides the exchange.
+* One exchange on the series key's hash bucket; everything else is
+  kernel-local.
 * Fallback model semantics per reference core.py:189-204: a model that raises
   inside the kernel is replaced by the fallback's numbers under the failing
   model's column name (so schemas stay fixed); without a fallback the task
-  fails loudly.
+  fails loudly. Argument errors (missing regressors, wrong ``X_df`` row
+  counts, missing stored state) are raised outside that rule.
 * Each series must fit in one task's memory — that is the reference's own
   model (a series is one GroupedArray slice); 10^5-point series ≈ 1 MB.
 """
 
 from __future__ import annotations
 
+import hashlib
+import pickle
+import time
 from typing import Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from sparkts.kernels.base import Model
+from sparkts.kernels.base import Model, norm_ppf, residual_sigma
 from sparkts.plans.schema import (
     cv_schema,
     fitted_schema,
     forecast_schema,
-    model_columns,
     simulate_schema,
 )
 
@@ -63,18 +75,63 @@ def _kernel_parallelism(df: DataFrame) -> tuple[int, int]:
     return n, n * 4
 
 
-def _apply_by_series(df: DataFrame, id_col: str, kernel, schema) -> DataFrame:
+def _stack(parts: list[dict], cols: list[str]) -> dict:
+    """Column-wise concatenation of column-array dicts (series or windows)."""
+    if len(parts) == 1:
+        return parts[0]
+    return {c: np.concatenate([p[c] for p in parts]) for c in cols}
+
+
+def _series_batch(id_col: str, time_col: str, series_fn,
+                  schema: T.StructType):
+    """The per-series skeleton: the Python function of one bucket.
+
+    ``run(rows)``, or ``run(rows, right_rows)`` for a cogroup, groups each
+    frame by ``id_col``, sorts every series by ``time_col`` once and calls
+    ``series_fn(uid, rows[, right_rows])`` for every id present on either
+    side (a missing side is an empty frame). ``series_fn`` returns a dict
+    of column arrays, or None to emit nothing. The bucket's output is ONE
+    frame with the schema's columns in order — no per-series frame, no
+    concat; a bucket that emits nothing gives an empty frame typed by the
+    schema. This is the only place the engine crosses from Arrow batches to
+    series.
+    """
+    cols = schema.names
+
+    def run(*frames: pd.DataFrame) -> pd.DataFrame:
+        groups = [{uid: g.sort_values(time_col)
+                   for uid, g in f.groupby(id_col, sort=False)}
+                  for f in frames]
+        empty = [f.iloc[:0] for f in frames]
+        parts = []
+        for uid in dict.fromkeys(u for g in groups for u in g):
+            out = series_fn(uid, *(g.get(uid, e)
+                                   for g, e in zip(groups, empty)))
+            if out is not None:
+                parts.append(out)
+        if not parts:
+            return to_arrow_schema(schema).empty_table().to_pandas()
+        return pd.DataFrame(_stack(parts, cols), columns=cols)
+
+    return run
+
+
+def _apply_by_series(df: DataFrame, id_col: str, time_col: str, series_fn,
+                     schema: T.StructType,
+                     right: DataFrame | None = None) -> DataFrame:
     """Grouped-map kernel over series, batched by hash bucket (r6).
 
     Shape: one exchange on ``pmod(xxhash64(id), B)``, then ONE Arrow
-    grouped-map call per *bucket* whose Python function applies ``kernel``
-    to each series inside (guide §4.1 — fewer, larger batches across the
-    Python boundary). Measured rationale: per-GROUP applyInPandas overhead
-    is ~0.5 ms, so at 2000 series the old one-call-per-series shape spent
-    ~1 s of cv9's 1.3 s wall on boundary overhead — 4× the model compute.
-    Bucketing cuts the Python-call count from n_series to B while the
-    per-series arithmetic (and every output value) is unchanged: ``kernel``
-    still receives exactly one series' rows per invocation.
+    grouped-map call per *bucket* that runs ``_series_batch`` over the
+    series inside (guide §4.1 — fewer, larger batches across the Python
+    boundary). Measured rationale: per-GROUP applyInPandas overhead is
+    ~0.5 ms, so at 2000 series a one-call-per-series shape spent ~1 s of
+    cv9's 1.3 s wall on boundary overhead — 4× the model compute.
+    With ``right`` (the exog paths) both sides are bucketed with the SAME
+    hash and bucket count (co-partitioned, one shuffle each side) and
+    cogrouped; ``series_fn(uid, left_rows, right_rows)`` then sees every
+    id present on either side — the cogroup-on-id contract the per-series
+    validation errors rely on.
 
     Why an explicit repartition: AQE coalesces shuffle partitions by JVM
     byte size, and a panel small in bytes coalesces to ONE partition —
@@ -82,54 +139,16 @@ def _apply_by_series(df: DataFrame, id_col: str, kernel, schema) -> DataFrame:
     repartitioning alone, and the groupBy reuses it (no second exchange —
     asserted in tests/test_plans.py)."""
     n, b = _kernel_parallelism(df)
+    run = _series_batch(id_col, time_col, series_fn, schema)
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.drop(columns=[_BKT])
-        outs = [kernel(g) for _, g in pdf.groupby(id_col, sort=False)]
-        if len(outs) == 1:
-            return outs[0]
-        return pd.concat(outs, ignore_index=True)
+    def bucketed(d: DataFrame):
+        return (d.withColumn(_BKT, F.pmod(F.xxhash64(id_col), F.lit(b)))
+                .repartition(n, _BKT).groupBy(_BKT))
 
-    return (
-        df.withColumn(_BKT, F.pmod(F.xxhash64(id_col), F.lit(b)))
-        .repartition(n, _BKT)
-        .groupBy(_BKT)
-        .applyInPandas(run, schema)
-    )
-
-
-def _apply_by_series_cogrouped(left: DataFrame, right: DataFrame,
-                               id_col: str, cokernel, schema) -> DataFrame:
-    """Cogrouped twin of ``_apply_by_series``: both sides bucketed with the
-    SAME hash/bucket count (co-partitioned, one shuffle each side), one
-    Python call per bucket, ``cokernel((uid,), left_rows, right_rows)``
-    applied per series inside. Series present on either side are visited,
-    with an empty frame for the missing side — the cogroup-on-id
-    contract the per-series kernels rely on for their validation errors."""
-    n, b = _kernel_parallelism(left)
-
-    def bucketed(df):
-        return (df.withColumn(_BKT, F.pmod(F.xxhash64(id_col), F.lit(b)))
-                .repartition(n, _BKT))
-
-    def run(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        lpdf = lpdf.drop(columns=[_BKT])
-        rpdf = rpdf.drop(columns=[_BKT])
-        lg = {k: g for k, g in lpdf.groupby(id_col, sort=False)}
-        rg = {k: g for k, g in rpdf.groupby(id_col, sort=False)}
-        ids = list(lg) + [k for k in rg if k not in lg]
-        lempty, rempty = lpdf.iloc[0:0], rpdf.iloc[0:0]
-        outs = [cokernel((uid,), lg.get(uid, lempty), rg.get(uid, rempty))
-                for uid in ids]
-        if len(outs) == 1:
-            return outs[0]
-        return pd.concat(outs, ignore_index=True)
-
-    return (
-        bucketed(left).groupBy(_BKT)
-        .cogroup(bucketed(right).groupBy(_BKT))
-        .applyInPandas(run, schema)
-    )
+    if right is None:
+        return bucketed(df).applyInPandas(lambda pdf: run(pdf), schema)
+    return (bucketed(df).cogroup(bucketed(right))
+            .applyInPandas(lambda lpdf, rpdf: run(lpdf, rpdf), schema))
 
 
 def _future_index(last, h: int, freq):
@@ -141,39 +160,112 @@ def _future_index(last, h: int, freq):
     return pd.date_range(start=last + off, periods=h, freq=off)
 
 
-def _run_models(models, fallback, y, h, level, fitted, X=None, X_future=None,
-                timers=None, fallback_counts=None):
-    """Per-series model sweep with fallback (reference core.py:189-204).
+def _exog_kw(m: Model, X, X_future) -> dict:
+    """Regressor kwargs for a model that takes them, when there are any."""
+    if X is None or not m.takes_exog:
+        return {}
+    return {"X": X, "X_future": X_future}
 
-    ``timers``/``fallback_counts``: optional dicts of Spark accumulators
-    keyed by alias — the distributed analogue of the reference's per-model
-    wall-time bookkeeping (core.py:173,205 forecast_times_)."""
-    import time as _time
 
-    out: dict[str, np.ndarray] = {}
-    fitted_out: dict[str, np.ndarray] = {}
-    for m in models:
-        takes_x = m.uses_exog or getattr(m, "optional_exog", False)
-        kw = {"X": X, "X_future": X_future} if takes_x else {}
-        t0 = _time.perf_counter()
-        try:
-            res = m.forecast(y, h, level=level, fitted=fitted, **kw)
-        except Exception:
-            if fallback is None:
-                raise
-            res = fallback.forecast(y, h, level=level, fitted=fitted)
-            if fallback_counts is not None:
-                fallback_counts[repr(m)].add(1)
-        if timers is not None:
-            timers[repr(m)].add(_time.perf_counter() - t0)
-        alias = repr(m)
-        out[alias] = res["mean"]
-        for lv in sorted(level or []):
-            out[f"{alias}-lo-{lv}"] = res[f"lo-{lv}"]
-            out[f"{alias}-hi-{lv}"] = res[f"hi-{lv}"]
-        if fitted:
-            fitted_out[alias] = res.get("fitted")
-    return out, fitted_out
+def _fit_state(m: Model, y, X):
+    return m.fit_state(y, X=X) if X is not None and m.takes_exog \
+        else m.fit_state(y)
+
+
+def _require_forward(models, what: str) -> None:
+    """Parameterized models need fit_state/forward to re-apply stored
+    parameters (reference validation core.py:1188-1200) — checked at call
+    time, not in the workers."""
+    missing = [repr(m) for m in models if m.tunable and (
+        type(m).forward is Model.forward
+        or type(m).fit_state is Model.fit_state)]
+    if missing:
+        raise ValueError(
+            f"{what} needs a forward implementation for: {missing}")
+
+
+def _cv_windows(uid, n: int, h: int, n_windows: int, step_size: int,
+                input_size: int | None, drop_short: bool = False):
+    """(w, lo, train_end) of each rolling-origin window: test_size =
+    h + step_size·(n_windows−1) (reference core.py:1183); window w trains
+    on y[lo:train_end] (the trailing ``input_size`` points, or all) and
+    scores the next h points. A series with n ≤ test_size raises
+    (core.py:1205-1212), or yields no window under ``drop_short``."""
+    test_size = h + step_size * (n_windows - 1)
+    if n <= test_size:
+        if drop_short:
+            return []
+        raise ValueError(
+            f"series {uid!r} has {n} observations <= test_size {test_size}")
+    wins = []
+    for w in range(n_windows):
+        train_end = n - test_size + w * step_size
+        lo = 0 if input_size is None else max(0, train_end - input_size)
+        wins.append((w, lo, train_end))
+    return wins
+
+
+def _fitted_columns(fits: dict, y: np.ndarray, level) -> dict:
+    """In-sample fitted columns (NaN for a model without fitted values);
+    ``level`` adds fitted ± z·σ with σ = √(Σ resid²/(n−1)) — the
+    reference's ``_add_fitted_pi`` (models.py:103-113), one constant
+    residual-scale band across the in-sample period."""
+    data = {}
+    for alias, res in fits.items():
+        vals = res.get("fitted")
+        vals = vals if vals is not None else np.full(y.size, np.nan)
+        data[alias] = vals
+        if level:
+            se = residual_sigma(y - vals, max(y.size - 1, 1))
+            for lv in sorted(level):
+                z = norm_ppf(0.5 + lv / 200.0)
+                data[f"{alias}-lo-{lv}"] = vals - z * se
+                data[f"{alias}-hi-{lv}"] = vals + z * se
+    return data
+
+
+class _ModelStep:
+    """The one model-call step every engine method runs its models through.
+
+    ``step(call, fall)`` returns alias → ``call(m)`` for each model. Any
+    exception a model raises is answered with ``fall(fallback, m)`` when
+    the engine has a fallback model (reference core.py:189-204), and
+    re-raised otherwise. Every call, fallback included, is timed into
+    ``timers`` and every fallback counted into ``fallback_counts``: dicts
+    of Spark accumulators keyed by alias, the distributed analogue of the
+    reference's forecast_times_ (core.py:173,205).
+    ``step.columns(call, fall, level)`` lays the results out as forecast
+    columns ``{alias}``, ``{alias}-lo-{l}``, ``{alias}-hi-{l}``."""
+
+    def __init__(self, models, fallback, timers, fallback_counts):
+        self.models = models
+        self.fallback = fallback
+        self.timers = timers
+        self.fallback_counts = fallback_counts
+
+    def __call__(self, call, fall) -> dict:
+        out = {}
+        for m in self.models:
+            alias = repr(m)
+            t0 = time.perf_counter()
+            try:
+                out[alias] = call(m)
+            except Exception:
+                if self.fallback is None:
+                    raise
+                out[alias] = fall(self.fallback, m)
+                self.fallback_counts[alias].add(1)
+            self.timers[alias].add(time.perf_counter() - t0)
+        return out
+
+    def columns(self, call, fall, level) -> dict:
+        cols = {}
+        for alias, res in self(call, fall).items():
+            cols[alias] = res["mean"]
+            for lv in sorted(level or []):
+                cols[f"{alias}-lo-{lv}"] = res[f"lo-{lv}"]
+                cols[f"{alias}-hi-{lv}"] = res[f"hi-{lv}"]
+        return cols
 
 
 class SparkForecast:
@@ -197,26 +289,29 @@ class SparkForecast:
         self.models = list(models)
         self.freq = freq
         self.fallback_model = fallback_model
-        #: populated after a forecast() action runs: alias → accumulated
-        #: kernel seconds across all executors, and alias → fallback count
-        #: (reference forecast_times_, core.py:960)
+        #: populated after the action of any method that runs models:
+        #: alias → accumulated model-call seconds across all executors, and
+        #: alias → fallback count (reference forecast_times_, core.py:960)
         self.forecast_times_: dict[str, object] = {}
         self.fallback_counts_: dict[str, object] = {}
 
-    def _metrics(self, df: DataFrame):
-        """Fresh per-model accumulators registered on df's SparkContext."""
+    def _metrics(self, df: DataFrame) -> _ModelStep:
+        """The model-call step over fresh per-model accumulators registered
+        on df's SparkContext (every method that runs models calls this)."""
         sc = df.sparkSession.sparkContext
         self.forecast_times_ = {repr(m): sc.accumulator(0.0) for m in self.models}
         self.fallback_counts_ = {repr(m): sc.accumulator(0) for m in self.models}
-        return self.forecast_times_, self.fallback_counts_
+        return _ModelStep(self.models, self.fallback_model,
+                          self.forecast_times_, self.fallback_counts_)
 
     def metrics_table(self, spark: SparkSession | None = None) -> DataFrame:
         """Per-model wall-time + fallback counters as a queryable
         DataFrame (SURVEY §2.7 wall-time row; the reference exposes
         ``forecast_times_`` as a dict, core.py:960 — here it's a table a
         pipeline can join/append to its lineage). Accumulator values are
-        complete only after an ACTION has consumed the forecast output;
-        call this after the count/write, not after the lazy transform."""
+        complete only after an ACTION has consumed the output of any
+        method (forecast, predict, fit, cross_validation, ...); call this
+        after the count/write, not after the lazy transform."""
         spark = spark or SparkSession.getActiveSession()
         if spark is None:
             raise ValueError("no active SparkSession for metrics_table")
@@ -232,7 +327,8 @@ class SparkForecast:
 
     def log_metrics(self, lineage_store, stage: str = "forecast",
                     run_id: str = "") -> None:
-        """Append the per-model metrics to a ``LineageStore`` manifest —
+        """Append the per-model metrics, read after the action of any
+        method's output, to a ``LineageStore`` manifest —
         the run-over-run wall-time record a long-lived pipeline keeps
         (part_id = model alias, n_out = fallback count, rollup_hash =
         wall time in integer microseconds, so the row keeps the int64 type
@@ -271,63 +367,49 @@ class SparkForecast:
         reference's Fugue zip (fugue.py:25-51 _cotransform): one shuffle on
         each side, zero joins.
         """
-        models, freq, fallback = self.models, self.freq, self.fallback_model
+        models, freq = self.models, self.freq
         schema = forecast_schema(
             df.schema[id_col], df.schema[time_col], models, level
         )
-        cols = [id_col, time_col] + model_columns(models, level)
         exog_cols = [c for c in df.columns if c not in (id_col, time_col, target_col)]
-        uses_exog = any(m.uses_exog for m in models)
-        if uses_exog and (X_df is None or not exog_cols):
+        if any(m.uses_exog for m in models) and (X_df is None or not exog_cols):
             raise ValueError(
                 "models with uses_exog need exog columns in df and an X_df "
                 "with h future rows per id")  # reference core.py:753-764
+        if X_df is not None:
+            missing = [c for c in exog_cols if c not in X_df.columns]
+            if missing:
+                raise ValueError(f"X_df is missing exog columns {missing}")
+        step = self._metrics(df)
 
-        timers, fb_counts = self._metrics(df)
+        def series_fn(uid, rows: pd.DataFrame, xf: pd.DataFrame | None = None):
+            y = rows[target_col].to_numpy(dtype=np.float64)
+            X = X_future = None
+            if xf is None:
+                future = _future_index(rows[time_col].iloc[-1], h, freq)
+            else:
+                X = rows[exog_cols].to_numpy(dtype=np.float64)
+                X_future = xf[exog_cols].to_numpy(dtype=np.float64)
+                future = xf[time_col].to_numpy()
+                if len(future) != h:
+                    raise ValueError(
+                        f"series {uid!r}: X_df has {len(future)} rows, "
+                        f"expected h={h}")
+            data = {id_col: np.repeat(uid, h), time_col: future}
+            data.update(step.columns(
+                lambda m: m.forecast(y, h, level=level,
+                                     **_exog_kw(m, X, X_future)),
+                lambda fb, m: fb.forecast(y, h, level=level), level))
+            return data
 
         if X_df is None:
-            def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-                pdf = pdf.sort_values(time_col)
-                y = pdf[target_col].to_numpy(dtype=np.float64)
-                last = pdf[time_col].iloc[-1]
-                future = _future_index(last, h, freq)
-                out, _ = _run_models(models, fallback, y, h, level,
-                                     fitted=False, timers=timers,
-                                     fallback_counts=fb_counts)
-                data = {id_col: np.repeat(pdf[id_col].iloc[0], h), time_col: future}
-                data.update(out)
-                return pd.DataFrame(data, columns=cols)
-
             return _apply_by_series(
-                df.select(id_col, time_col, target_col), id_col, kernel,
-                schema)
-
-        missing = [c for c in exog_cols if c not in X_df.columns]
-        if missing:
-            raise ValueError(f"X_df is missing exog columns {missing}")
-
-        def cokernel(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            left = left.sort_values(time_col)
-            right = right.sort_values(time_col)
-            y = left[target_col].to_numpy(dtype=np.float64)
-            X = left[exog_cols].to_numpy(dtype=np.float64)
-            X_future = right[exog_cols].to_numpy(dtype=np.float64)
-            future = right[time_col].to_numpy()
-            if len(future) != h:
-                raise ValueError(
-                    f"series {key[0]!r}: X_df has {len(future)} rows, "
-                    f"expected h={h}")
-            out, _ = _run_models(models, fallback, y, h, level, fitted=False,
-                                 X=X, X_future=X_future, timers=timers,
-                                 fallback_counts=fb_counts)
-            data = {id_col: np.repeat(key[0], h), time_col: future}
-            data.update(out)
-            return pd.DataFrame(data, columns=cols)
-
-        return _apply_by_series_cogrouped(
-            df.select(id_col, time_col, target_col, *exog_cols),
-            X_df.select(id_col, time_col, *exog_cols), id_col, cokernel,
-            schema)
+                df.select(id_col, time_col, target_col), id_col, time_col,
+                series_fn, schema)
+        return _apply_by_series(
+            df.select(id_col, time_col, target_col, *exog_cols), id_col,
+            time_col, series_fn, schema,
+            right=X_df.select(id_col, time_col, *exog_cols))
 
     # ------------------------------------------------------------------ #
     def fit(
@@ -348,12 +430,12 @@ class SparkForecast:
         Exog models: every df column beyond id/time/target is a regressor.
         The train X matrix is persisted inside the state blob (like y), so
         ``predict`` only needs the FUTURE regressors via its ``X_df``.
+        Parameterized models without a forward implementation raise here,
+        before any Spark job.
         """
-        import pickle
-
-        from pyspark.sql import types as T
-
-        models, fallback = self.models, self.fallback_model
+        models = self.models
+        _require_forward(models, "fit")
+        aliases = np.array([repr(m) for m in models], dtype=object)
         exog_cols = [c for c in df.columns
                      if c not in (id_col, time_col, target_col)]
         schema = T.StructType([
@@ -363,43 +445,34 @@ class SparkForecast:
             T.StructField(time_col, df.schema[time_col].dataType, True),
             T.StructField("n_obs", T.LongType(), False),
         ])
+        step = self._metrics(df)
 
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(time_col)
-            y = pdf[target_col].to_numpy(dtype=np.float64)
-            X = (pdf[exog_cols].to_numpy(dtype=np.float64)
+        def series_fn(uid, rows: pd.DataFrame):
+            y = rows[target_col].to_numpy(dtype=np.float64)
+            X = (rows[exog_cols].to_numpy(dtype=np.float64)
                  if exog_cols else None)
-            uid = pdf[id_col].iloc[0]
-            last = pdf[time_col].iloc[-1]
-            rows = []
+            states = step(lambda m: _fit_state(m, y, X),
+                          lambda fb, m: {"__fallback__": True})
+            blobs = []
             for m in models:
-                takes_x = X is not None and (
-                    m.uses_exog or getattr(m, "optional_exog", False))
-                try:
-                    state = m.fit_state(y, X) if takes_x else m.fit_state(y)
-                except NotImplementedError:
-                    raise
-                except Exception:
-                    if fallback is None:
-                        raise
-                    state = {"__fallback__": True}
-                blob = {"state": state, "y": y}
-                if takes_x:
+                blob = {"state": states[repr(m)], "y": y}
+                if X is not None and m.takes_exog:
                     # persist the regressor NAMES with the matrix so predict
                     # can validate/reorder its X_df against the fit-time
                     # column order (a permuted X_df must never silently
                     # apply beta to the wrong columns)
                     blob["X"] = X
                     blob["xcols"] = list(exog_cols)
-                rows.append((uid, repr(m), pickle.dumps(blob), last,
-                             int(y.size)))
-            return pd.DataFrame(rows,
-                                columns=[id_col, "model", "state", time_col,
-                                         "n_obs"])
+                blobs.append(pickle.dumps(blob))
+            k = len(models)
+            return {id_col: np.repeat(uid, k), "model": aliases,
+                    "state": np.array(blobs, dtype=object),
+                    time_col: np.repeat(rows[time_col].to_numpy()[-1:], k),
+                    "n_obs": np.full(k, y.size, dtype=np.int64)}
 
         return _apply_by_series(
             df.select(id_col, time_col, target_col, *exog_cols), id_col,
-            kernel, schema)
+            time_col, series_fn, schema)
 
     def predict(
         self,
@@ -419,98 +492,78 @@ class SparkForecast:
         Exog models: pass ``X_df`` = (id, ds, regressors…) with exactly h
         FUTURE rows per id (reference predict(h, X_df), core.py:766-815);
         the train X matrix comes from the state blob ``fit`` persisted."""
-        import pickle
-
-        models, freq, fallback = self.models, self.freq, self.fallback_model
+        models, freq = self.models, self.freq
+        _require_forward(models, "predict")
         by_alias = {repr(m): m for m in models}
         schema = forecast_schema(
             states.schema[id_col], states.schema[time_col], models, level)
-        cols = [id_col, time_col] + model_columns(models, level)
         exog_cols = ([c for c in X_df.columns if c not in (id_col, time_col)]
                      if X_df is not None else [])
-        timers, fb_counts = self._metrics(states)
+        step = self._metrics(states)
 
-        def predict_rows(pdf: pd.DataFrame, future, xf_pdf) -> pd.DataFrame:
-            if pdf.empty:
-                raise ValueError(
-                    "X_df contains a series with no stored state rows; fit "
-                    "must cover every id predict is asked for")
-            uid = pdf[id_col].iloc[0]
-            data = {id_col: np.repeat(uid, h), time_col: np.asarray(future)}
-            seen = set()
-            for _, row in pdf.iterrows():
-                alias = row["model"]
-                m = by_alias.get(alias)
-                if m is None:
-                    continue
-                seen.add(alias)
-                blob = pickle.loads(bytes(row["state"]))
-                y = blob["y"]
-                state = blob["state"]
-                kw = {}
-                takes_x = m.uses_exog or getattr(m, "optional_exog", False)
-                if "xcols" in blob and takes_x:
-                    # state was fitted WITH regressors: X_df is mandatory and
-                    # must carry the same columns (any order); reorder to the
-                    # fit-time order so beta applies to the right columns
-                    want = blob["xcols"]
-                    if xf_pdf is None:
-                        raise ValueError(
-                            f"series {uid!r}: {alias} was fit with exog "
-                            f"columns {want}; predict needs X_df")
-                    missing = [c for c in want if c not in xf_pdf.columns]
-                    if missing:
-                        raise ValueError(
-                            f"series {uid!r}: X_df is missing exog columns "
-                            f"{missing} that {alias} was fit with")
-                    kw = {"X": blob["X"],
-                          "X_future": xf_pdf[want].to_numpy(dtype=np.float64)}
-                elif xf_pdf is not None and takes_x:
-                    kw = {"X": blob.get("X"),
-                          "X_future":
-                              xf_pdf[exog_cols].to_numpy(dtype=np.float64)}
-                try:
-                    if isinstance(state, dict) and state.get("__fallback__"):
-                        raise ValueError("fallback state")
-                    res = m.forward(state, y, h, level=level, **kw)
-                except NotImplementedError:
-                    raise
-                except Exception:
-                    if fallback is None:
-                        raise
-                    res = fallback.forecast(y, h, level=level)
-                    fb_counts[alias].add(1)
-                data[alias] = np.asarray(res["mean"], dtype=np.float64)
-                for lv in sorted(level or []):
-                    data[f"{alias}-lo-{lv}"] = np.asarray(res[f"lo-{lv}"])
-                    data[f"{alias}-hi-{lv}"] = np.asarray(res[f"hi-{lv}"])
-            missing = [a for a in by_alias if a not in seen]
+        def exog_kw(uid, alias, blob, xf):
+            if not by_alias[alias].takes_exog:
+                return {}
+            if "xcols" in blob:
+                # state was fitted WITH regressors: X_df is mandatory and
+                # must carry the same columns (any order); reorder to the
+                # fit-time order so beta applies to the right columns
+                want = blob["xcols"]
+                if xf is None:
+                    raise ValueError(
+                        f"series {uid!r}: {alias} was fit with exog "
+                        f"columns {want}; predict needs X_df")
+                missing = [c for c in want if c not in xf.columns]
+                if missing:
+                    raise ValueError(
+                        f"series {uid!r}: X_df is missing exog columns "
+                        f"{missing} that {alias} was fit with")
+                return {"X": blob["X"],
+                        "X_future": xf[want].to_numpy(dtype=np.float64)}
+            if xf is not None:
+                return {"X": blob.get("X"),
+                        "X_future": xf[exog_cols].to_numpy(dtype=np.float64)}
+            return {}
+
+        def series_fn(uid, rows: pd.DataFrame, xf: pd.DataFrame | None = None):
+            if xf is None:
+                future = _future_index(rows[time_col].iloc[0], h, freq)
+            else:
+                if rows.empty:
+                    raise ValueError(
+                        f"series {uid!r}: X_df rows but no stored state rows")
+                if len(xf) != h:
+                    raise ValueError(
+                        f"series {uid!r}: X_df has {len(xf)} rows, "
+                        f"expected h={h}")
+                future = xf[time_col].to_numpy()
+            blobs = {a: pickle.loads(bytes(s))
+                     for a, s in zip(rows["model"], rows["state"])
+                     if a in by_alias}
+            missing = [a for a in by_alias if a not in blobs]
             if missing:
                 raise ValueError(
                     f"series {uid!r}: no stored state for models {missing}")
-            return pd.DataFrame(data, columns=cols)
+            kws = {a: exog_kw(uid, a, b, xf) for a, b in blobs.items()}
 
-        if X_df is None:
-            def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-                last = pdf[time_col].iloc[0]
-                return predict_rows(pdf, _future_index(last, h, freq), None)
+            def call(m):
+                blob = blobs[repr(m)]
+                state = blob["state"]
+                if isinstance(state, dict) and state.get("__fallback__"):
+                    raise ValueError("fallback state")
+                return m.forward(state, blob["y"], h, level=level,
+                                 **kws[repr(m)])
 
-            return _apply_by_series(states, id_col, kernel, schema)
+            data = {id_col: np.repeat(uid, h), time_col: np.asarray(future)}
+            data.update(step.columns(
+                call, lambda fb, m: fb.forecast(blobs[repr(m)]["y"], h,
+                                                level=level), level))
+            return data
 
-        def cokernel(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            right = right.sort_values(time_col)
-            if left.empty:
-                raise ValueError(
-                    f"series {key[0]!r}: X_df rows but no stored state rows")
-            if len(right) != h:
-                raise ValueError(
-                    f"series {key[0]!r}: X_df has {len(right)} rows, "
-                    f"expected h={h}")
-            return predict_rows(left, right[time_col].to_numpy(), right)
-
-        return _apply_by_series_cogrouped(
-            states, X_df.select(id_col, time_col, *exog_cols), id_col,
-            cokernel, schema)
+        return _apply_by_series(
+            states, id_col, time_col, series_fn, schema,
+            right=None if X_df is None
+            else X_df.select(id_col, time_col, *exog_cols))
 
     # ------------------------------------------------------------------ #
     def fitted_values(
@@ -524,41 +577,29 @@ class SparkForecast:
         """In-sample one-step predictions per model
         (reference forecast_fitted_values, core.py:1095-1120).
 
-        ``level`` adds ``{model}-lo/hi-{l}`` fitted prediction intervals:
-        fitted ± z·σ with σ = √(Σ resid²/(n−1)) — the reference's
-        ``_add_fitted_pi`` (models.py:103-113), which applies one constant
-        residual-scale band across the in-sample period."""
-        from sparkts.kernels.base import norm_ppf, residual_sigma
-
-        models, fallback = self.models, self.fallback_model
+        ``level`` adds ``{model}-lo/hi-{l}`` fitted prediction intervals
+        (see ``_fitted_columns``)."""
         schema = fitted_schema(
-            df.schema[id_col], df.schema[time_col], target_col, models,
+            df.schema[id_col], df.schema[time_col], target_col, self.models,
             level=level
         )
-        cols = [id_col, time_col, target_col] + model_columns(models, level)
+        step = self._metrics(df)
 
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(time_col)
-            y = pdf[target_col].to_numpy(dtype=np.float64)
-            _, fit = _run_models(models, fallback, y, 1, None, fitted=True)
+        def series_fn(uid, rows: pd.DataFrame):
+            y = rows[target_col].to_numpy(dtype=np.float64)
+            fits = step(lambda m: m.forecast(y, 1, fitted=True),
+                        lambda fb, m: fb.forecast(y, 1, fitted=True))
             data = {
-                id_col: pdf[id_col].to_numpy(),
-                time_col: pdf[time_col].to_numpy(),
+                id_col: rows[id_col].to_numpy(),
+                time_col: rows[time_col].to_numpy(),
                 target_col: y,
             }
-            for alias, vals in fit.items():
-                vals = vals if vals is not None else np.full(y.size, np.nan)
-                data[alias] = vals
-                if level:
-                    se = residual_sigma(y - vals, max(y.size - 1, 1))
-                    for lv in sorted(level):
-                        z = norm_ppf(0.5 + lv / 200.0)
-                        data[f"{alias}-lo-{lv}"] = vals - z * se
-                        data[f"{alias}-hi-{lv}"] = vals + z * se
-            return pd.DataFrame(data, columns=cols)
+            data.update(_fitted_columns(fits, y, level))
+            return data
 
         return _apply_by_series(
-            df.select(id_col, time_col, target_col), id_col, kernel, schema)
+            df.select(id_col, time_col, target_col), id_col, time_col,
+            series_fn, schema)
 
     # ------------------------------------------------------------------ #
     def simulate(
@@ -587,41 +628,34 @@ class SparkForecast:
         error_dist='hash-bootstrap' the whole simulation is replayable in
         SQL (the driver's simulate_hash oracle).
         """
-        import hashlib
+        freq = self.freq
+        schema = simulate_schema(df.schema[id_col], df.schema[time_col],
+                                 self.models)
+        step = self._metrics(df)
 
-        models, freq, fallback = self.models, self.freq, self.fallback_model
-        schema = simulate_schema(df.schema[id_col], df.schema[time_col], models)
-        cols = [id_col, time_col, "sample_id"] + [repr(m) for m in models]
-
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(time_col)
-            y = pdf[target_col].to_numpy(dtype=np.float64)
-            uid = pdf[id_col].iloc[0]
+        def series_fn(uid, rows: pd.DataFrame):
+            y = rows[target_col].to_numpy(dtype=np.float64)
             s = int(hashlib.md5(f"{seed}:{uid}".encode()).hexdigest()[:8],
                     16) % 2147483648
-            last = pdf[time_col].iloc[-1]
-            future = _future_index(last, h, freq)
+            future = _future_index(rows[time_col].iloc[-1], h, freq)
+
+            def sim(m):
+                return m.simulate(y, h, n_paths=n_paths, seed=s,
+                                  error_dist=error_dist,
+                                  error_params=error_params)
+
             data = {
                 id_col: np.repeat(uid, h * n_paths),
                 time_col: np.tile(np.asarray(future), n_paths),
                 "sample_id": np.repeat(np.arange(n_paths, dtype=np.int32), h),
             }
-            for m in models:
-                try:
-                    paths = m.simulate(y, h, n_paths=n_paths, seed=s,
-                                       error_dist=error_dist,
-                                       error_params=error_params)
-                except Exception:
-                    if fallback is None:
-                        raise
-                    paths = fallback.simulate(y, h, n_paths=n_paths, seed=s,
-                                              error_dist=error_dist,
-                                              error_params=error_params)
-                data[repr(m)] = paths.reshape(-1)
-            return pd.DataFrame(data, columns=cols)
+            for alias, paths in step(sim, lambda fb, m: sim(fb)).items():
+                data[alias] = paths.reshape(-1)
+            return data
 
         return _apply_by_series(
-            df.select(id_col, time_col, target_col), id_col, kernel, schema)
+            df.select(id_col, time_col, target_col), id_col, time_col,
+            series_fn, schema)
 
     # ------------------------------------------------------------------ #
     def cross_validation(
@@ -641,11 +675,9 @@ class SparkForecast:
     ) -> DataFrame:
         """Rolling-origin backtest (reference core.py:246-383).
 
-        test_size = h + step_size·(n_windows−1) (core.py:1183); window w
-        trains on everything before cutoff_w (or the trailing ``input_size``
-        points) and scores the next h points. Series shorter than
-        test_size+1 raise (reference core.py:1205-1212) unless
-        ``drop_short=True`` drops them kernel-side.
+        Windows as in ``_cv_windows``: test_size = h + step_size·(n_windows−1);
+        series shorter than test_size+1 raise unless ``drop_short=True``
+        drops them kernel-side.
 
         Exogenous regressors: every df column beyond id/time/target is exog
         and is sliced with y per window — X on the train slice, X_future on
@@ -668,117 +700,68 @@ class SparkForecast:
         The whole backtest loop runs inside one kernel call per series
         (reference-shaped "Option A"): state stays local.
         """
-        models, freq, fallback = self.models, self.freq, self.fallback_model
+        models = self.models
         exog_cols = [c for c in df.columns
                      if c not in (id_col, time_col, target_col)]
-        uses_exog = any(m.uses_exog for m in models)
-        if uses_exog and not exog_cols:
+        if any(m.uses_exog for m in models) and not exog_cols:
             raise ValueError(
                 "models with uses_exog need exog columns in df")
         if refit is not True:
             if isinstance(refit, int) and not isinstance(refit, bool) and refit < 1:
                 raise ValueError("refit must be True, False, or a positive int")
-            missing = [repr(m) for m in models
-                       if m.tunable and type(m).forward is Model.forward]
-            if missing:
-                raise ValueError(
-                    f"refit={refit} needs a forward implementation for: "
-                    f"{missing}")  # reference core.py:1188-1200
-        test_size = h + step_size * (n_windows - 1)
+            _require_forward(models, f"refit={refit}")
+        # k-th window refits; False (k=0) fits on the first window only
+        k = 0 if refit is True else int(refit)
         schema = cv_schema(
             df.schema[id_col], df.schema[time_col], target_col, models, level
         )
-        cols = [id_col, time_col, "cutoff", target_col] + model_columns(models, level)
+        cols = schema.names
         # optional_exog models (ARIMA xreg) consume the panel's regressors
         # when present, but never require them
-        wants_exog = uses_exog or any(
-            getattr(m, "optional_exog", False) for m in models)
-        keep_exog = exog_cols if wants_exog else []
+        keep_exog = exog_cols if any(m.takes_exog for m in models) else []
+        step = self._metrics(df)
 
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(time_col)
-            y = pdf[target_col].to_numpy(dtype=np.float64)
-            Xall = (pdf[keep_exog].to_numpy(dtype=np.float64)
+        def series_fn(uid, rows: pd.DataFrame):
+            y = rows[target_col].to_numpy(dtype=np.float64)
+            Xall = (rows[keep_exog].to_numpy(dtype=np.float64)
                     if keep_exog else None)
-            ts = pdf[time_col].to_numpy()
-            n = y.size
-            if n <= test_size:
-                if drop_short:
-                    empty = {
-                        id_col: pdf[id_col].iloc[:0],
-                        time_col: pdf[time_col].iloc[:0],
-                        "cutoff": pdf[time_col].iloc[:0],
-                        target_col: np.empty(0, dtype=np.float64),
-                    }
-                    for c in cols[4:]:
-                        empty[c] = np.empty(0, dtype=np.float64)
-                    return pd.DataFrame(empty)[cols]
-                raise ValueError(
-                    f"series {pdf[id_col].iloc[0]!r} has {n} observations "
-                    f"<= test_size {test_size}"
-                )
-            frames = []
+            ts = rows[time_col].to_numpy()
+            wins = _cv_windows(uid, y.size, h, n_windows, step_size,
+                               input_size, drop_short)
+            if not wins:
+                return None
             states: dict[str, object] = {}
-            for w in range(n_windows):
-                train_end = n - test_size + w * step_size
-                lo = 0 if input_size is None else max(0, train_end - input_size)
-                y_train = y[lo:train_end]
-                X_train = Xall[lo:train_end] if Xall is not None else None
-                X_fut = (Xall[train_end: train_end + h]
-                         if Xall is not None else None)
-                if refit is True:
-                    out, _ = _run_models(models, fallback, y_train, h, level,
-                                         fitted=False, X=X_train,
-                                         X_future=X_fut)
-                else:
-                    k = refit if isinstance(refit, int) and refit is not True else 0
-                    do_fit = w == 0 or (k and w % k == 0)
-                    out = {}
-                    for m in models:
-                        alias = repr(m)
-                        takes_x = Xall is not None and (
-                            m.uses_exog
-                            or getattr(m, "optional_exog", False))
-                        kw = ({"X": X_train, "X_future": X_fut}
-                              if takes_x else {})
-                        try:
-                            if do_fit or alias not in states:
-                                states[alias] = (m.fit_state(y_train, X=X_train)
-                                                 if takes_x
-                                                 else m.fit_state(y_train))
-                            res = m.forward(states[alias], y_train, h,
-                                            level=level, fitted=False, **kw)
-                        except NotImplementedError:
-                            raise
-                        except Exception:
-                            if fallback is None:
-                                raise
-                            res = fallback.forecast(y_train, h, level=level,
-                                                    fitted=False)
-                        out[alias] = res["mean"]
-                        for lv in sorted(level or []):
-                            out[f"{alias}-lo-{lv}"] = res[f"lo-{lv}"]
-                            out[f"{alias}-hi-{lv}"] = res[f"hi-{lv}"]
-                win = {
-                    id_col: np.repeat(pdf[id_col].iloc[0], h),
-                    time_col: ts[train_end : train_end + h],
-                    "cutoff": np.repeat(ts[train_end - 1], h),
-                    target_col: y[train_end : train_end + h],
+            blocks = []
+            for w, lo, end in wins:
+                y_train = y[lo:end]
+                X_train = Xall[lo:end] if Xall is not None else None
+                X_fut = Xall[end: end + h] if Xall is not None else None
+                do_fit = w == 0 or (k and w % k == 0)
+
+                def call(m):
+                    kw = _exog_kw(m, X_train, X_fut)
+                    if refit is True:
+                        return m.forecast(y_train, h, level=level, **kw)
+                    if do_fit or repr(m) not in states:
+                        states[repr(m)] = _fit_state(m, y_train, X_train)
+                    return m.forward(states[repr(m)], y_train, h,
+                                     level=level, **kw)
+
+                block = {
+                    id_col: np.repeat(uid, h),
+                    time_col: ts[end: end + h],
+                    "cutoff": np.repeat(ts[end - 1], h),
+                    target_col: y[end: end + h],
                 }
-                win.update(out)
-                frames.append(win)
-            # one DataFrame per series, columns pre-concatenated (r6: the
-            # per-window pd.DataFrame + pd.concat + [cols] reindex was
-            # ~35% of the cheap-model cv kernel profile; same values, one
-            # construction)
-            if len(frames) == 1:
-                return pd.DataFrame(frames[0], columns=cols)
-            data = {c: np.concatenate([f[c] for f in frames]) for c in cols}
-            return pd.DataFrame(data, columns=cols)
+                block.update(step.columns(
+                    call, lambda fb, m: fb.forecast(y_train, h, level=level),
+                    level))
+                blocks.append(block)
+            return _stack(blocks, cols)
 
         out = _apply_by_series(
             df.select(id_col, time_col, target_col, *keep_exog), id_col,
-            kernel, schema)
+            time_col, series_fn, schema)
         return out.orderBy(id_col, "cutoff", time_col) if sort else out
 
     # ------------------------------------------------------------------ #
@@ -799,40 +782,33 @@ class SparkForecast:
         fitted values over that window — for analyzing how fit drifts
         across training periods. Output: id, ds, cutoff, y, <model cols>.
         """
-        models, fallback = self.models, self.fallback_model
-        test_size = h + step_size * (n_windows - 1)
         schema = cv_schema(
-            df.schema[id_col], df.schema[time_col], target_col, models, None
+            df.schema[id_col], df.schema[time_col], target_col, self.models,
+            None
         )
-        cols = [id_col, time_col, "cutoff", target_col] + [repr(m) for m in models]
+        cols = schema.names
+        step = self._metrics(df)
 
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(time_col)
-            y = pdf[target_col].to_numpy(dtype=np.float64)
-            ts = pdf[time_col].to_numpy()
-            n = y.size
-            if n <= test_size:
-                raise ValueError(
-                    f"series {pdf[id_col].iloc[0]!r} has {n} observations "
-                    f"<= test_size {test_size}")
-            frames = []
-            for w in range(n_windows):
-                train_end = n - test_size + w * step_size
-                lo = 0 if input_size is None else max(0, train_end - input_size)
-                y_train = y[lo:train_end]
-                _, fit = _run_models(models, fallback, y_train, 1, None,
-                                     fitted=True)
-                data = {
-                    id_col: np.repeat(pdf[id_col].iloc[0], train_end - lo),
-                    time_col: ts[lo:train_end],
-                    "cutoff": np.repeat(ts[train_end - 1], train_end - lo),
+        def series_fn(uid, rows: pd.DataFrame):
+            y = rows[target_col].to_numpy(dtype=np.float64)
+            ts = rows[time_col].to_numpy()
+            blocks = []
+            for _, lo, end in _cv_windows(uid, y.size, h, n_windows,
+                                          step_size, input_size):
+                y_train = y[lo:end]
+                fits = step(lambda m: m.forecast(y_train, 1, fitted=True),
+                            lambda fb, m: fb.forecast(y_train, 1,
+                                                      fitted=True))
+                block = {
+                    id_col: np.repeat(uid, end - lo),
+                    time_col: ts[lo:end],
+                    "cutoff": np.repeat(ts[end - 1], end - lo),
                     target_col: y_train,
                 }
-                for alias, vals in fit.items():
-                    data[alias] = (vals if vals is not None
-                                   else np.full(y_train.size, np.nan))
-                frames.append(pd.DataFrame(data))
-            return pd.concat(frames, ignore_index=True)[cols]
+                block.update(_fitted_columns(fits, y_train, None))
+                blocks.append(block)
+            return _stack(blocks, cols)
 
         return _apply_by_series(
-            df.select(id_col, time_col, target_col), id_col, kernel, schema)
+            df.select(id_col, time_col, target_col), id_col, time_col,
+            series_fn, schema)

@@ -8,10 +8,12 @@ works like a source tree.  The shared library is compiled once per machine
 into a per-user temp cache keyed on the source hash; every executor that
 imports the package finds (or builds) the same cached ``.so``.  Concurrent
 builders compile to a pid-suffixed temp file and ``os.replace`` it into
-place, so races converge on one artifact.  If no C compiler exists (or
-``SPARKTS_NO_NATIVE`` is set) ``LIB`` is None and callers keep the original
-Python paths — behaviour is identical either way (tests/test_native.py
-asserts bitwise equality).
+place, so races converge on one artifact.  If the library cannot be
+built or loaded (no C compiler, a failed compile, no ``_native.c`` in the
+package) ``LIB`` is None, one ``RuntimeWarning`` names the reason, and
+callers keep the original Python paths; ``SPARKTS_NO_NATIVE`` selects the
+Python paths silently. Behaviour is identical either way
+(tests/test_native.py asserts bitwise equality).
 """
 
 from __future__ import annotations
@@ -23,6 +25,7 @@ import pkgutil
 import shutil
 import subprocess
 import tempfile
+import warnings
 
 import numpy as np
 from numpy.ctypeslib import ndpointer
@@ -35,7 +38,11 @@ def _load():
     if os.environ.get("SPARKTS_NO_NATIVE"):
         return None
     try:
-        src = pkgutil.get_data(__package__, "_native.c")
+        try:
+            src = pkgutil.get_data(__package__, "_native.c")
+        except OSError as e:
+            return _unavailable(f"cannot read _native.c from the package: "
+                                f"{e!r}")
         tag = hashlib.md5(src).hexdigest()[:12]
         cache = os.path.join(
             tempfile.gettempdir(), f"sparkts-native-{os.getuid()}")
@@ -45,15 +52,19 @@ def _load():
             cc = (shutil.which("cc") or shutil.which("gcc")
                   or shutil.which("clang"))
             if cc is None:
-                return None
+                return _unavailable("no C compiler (cc, gcc or clang) found")
             tmp = f"{so}.tmp{os.getpid()}"
             # -ffp-contract=off / -fno-fast-math: no FMA fusion or FP
             # reordering — required for bit-exactness with CPython floats.
             # The source goes in on stdin (`-x c -`): it may live in a zip.
-            subprocess.run(
-                [cc, "-O2", "-fPIC", "-shared", "-ffp-contract=off",
-                 "-fno-fast-math", "-o", tmp, "-x", "c", "-"],
-                input=src, check=True, capture_output=True, timeout=120)
+            try:
+                subprocess.run(
+                    [cc, "-O2", "-fPIC", "-shared", "-ffp-contract=off",
+                     "-fno-fast-math", "-o", tmp, "-x", "c", "-"],
+                    input=src, check=True, capture_output=True, timeout=120)
+            except subprocess.CalledProcessError as e:
+                tail = e.stderr.decode(errors="replace").strip()[-500:]
+                return _unavailable(f"{cc} failed: {tail}")
             os.replace(tmp, so)
         lib = ctypes.CDLL(so)
         # raw-pointer prototypes: the kernels are called tens of thousands
@@ -112,8 +123,17 @@ def _load():
             ctypes.c_void_p, ctypes.c_void_p, ctypes.c_void_p,
         ]
         return lib
-    except Exception:
-        return None
+    except Exception as e:
+        return _unavailable(f"cannot build or load the library: {e!r}")
+
+
+def _unavailable(reason: str) -> None:
+    """Say once per process (``_load`` runs at import) why the Python
+    kernels run instead of the C ones; a slow executor is then told apart
+    from one without native kernels."""
+    warnings.warn(f"sparkts native kernels unavailable, using the Python "
+                  f"kernels: {reason}", RuntimeWarning, stacklevel=3)
+    return None
 
 
 LIB = _load()

@@ -8,8 +8,9 @@ predictions), and per confidence level ``lo-{l}`` / ``hi-{l}`` h-vectors.
 ``repr(model)`` (the ``alias``) names the output columns, matching the
 reference's column-naming scheme (models.py:185-186, core.py:126-130).
 
-These kernels are plain numpy over a single series — they run inside
-``applyInPandas`` Arrow batches (one call per series), never per-row.
+These kernels are plain numpy over a single series, never per-row. The
+engine calls them from one ``applyInPandas`` call per hash bucket of series
+(``engine._series_batch``), one series at a time.
 
 No scipy in this environment: the gaussian quantile uses Acklam's rational
 approximation of the inverse normal CDF (|rel err| < 1.15e-9), which is more
@@ -107,8 +108,7 @@ def _conformal_scores(model, y: np.ndarray, h: int, n_windows: int,
     for w in range(n_windows):
         cut = n - (n_windows - w) * h
         kw = {}
-        if model.uses_exog or (getattr(model, "optional_exog", False)
-                               and X is not None):
+        if model.uses_exog or (model.optional_exog and X is not None):
             if X is None:
                 raise ValueError(
                     f"{model.alias} uses exog; conformal calibration needs X")
@@ -293,6 +293,9 @@ class Model:
     """
 
     uses_exog = False
+    #: True for models that consume (X, X_future) when the engine provides
+    #: them but, unlike uses_exog models, run univariate without them
+    optional_exog = False
 
     def __init__(self, alias: str | None = None,
                  prediction_intervals: ConformalIntervals | None = None):
@@ -301,6 +304,11 @@ class Model:
 
     def __repr__(self) -> str:
         return self.alias
+
+    @property
+    def takes_exog(self) -> bool:
+        """Whether the engine hands this model the panel's regressors."""
+        return self.uses_exog or self.optional_exog
 
     # subclass hook
     def _forecast(self, y: np.ndarray, h: int, fitted: bool):
@@ -364,8 +372,7 @@ class Model:
                 "and X_future (h rows)")  # reference core.py:753-764
         # optional_exog models (ARIMA/AutoARIMA xreg) consume regressors
         # when the engine provides them but run univariate otherwise
-        if ((self.uses_exog or getattr(self, "optional_exog", False))
-                and X is not None and X_future is not None):
+        if self.takes_exog and X is not None and X_future is not None:
             mean, sigmah, fitted_vals = self._forecast_exog(
                 y, h, fitted or bool(level), np.asarray(X, dtype=np.float64),
                 np.asarray(X_future, dtype=np.float64))

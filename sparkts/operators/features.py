@@ -5,9 +5,11 @@ series, attach trend + seasonal columns to the TRAIN frame, and produce a
 FUTURE frame (h rows per id) whose trend column is the trend sub-forecaster's
 prediction and whose seasonal columns tile the last cycle.
 
-Spark shape: one ``applyInPandas`` pass per series emits both frames as a
-tagged union (``frame`` ∈ {'train','future'}) so the decomposition runs
-exactly once; ``split_frames`` persists and filters. One shuffle total.
+Spark shape: the engine's per-series skeleton (``engine._apply_by_series``:
+hash buckets of series, one ``applyInPandas`` call per bucket) emits both
+frames of each series as a tagged union (``frame`` ∈ {'train','future'}) so
+the decomposition runs exactly once; ``split_frames`` persists and filters.
+One shuffle total.
 """
 
 from __future__ import annotations
@@ -16,8 +18,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from sparkts.engine import _future_index
-from sparkts.kernels.mstl import MSTL
+from sparkts.engine import _apply_by_series, _future_index
+from sparkts.kernels.mstl import MSTL, mstl
 
 
 def mstl_decomposition(
@@ -45,47 +47,31 @@ def mstl_decomposition(
     fields += [T.StructField(c, T.DoubleType(), True) for c in seas_cols]
     fields.append(T.StructField("frame", T.StringType(), False))
     schema = T.StructType(fields)
-    cols = [id_col, time_col, target_col, "trend"] + seas_cols + ["frame"]
 
     trend_fc = model.trend_forecaster
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        from sparkts.kernels.mstl import mstl
-
-        pdf = pdf.sort_values(time_col)
-        y = pdf[target_col].to_numpy(dtype=np.float64)
-        uid = pdf[id_col].iloc[0]
+    def series_fn(uid, rows: pd.DataFrame) -> dict:
+        y = rows[target_col].to_numpy(dtype=np.float64)
+        n = y.size
         dec = mstl(y, periods)
-        train = {
-            id_col: pdf[id_col].to_numpy(),
-            time_col: pdf[time_col].to_numpy(),
-            target_col: y,
-            "trend": dec["trend"],
-            "frame": np.repeat("train", y.size),
-        }
-        future_ts = _future_index(pdf[time_col].iloc[-1], h, freq)
-        tr_fc = trend_fc.forecast(dec["trend"], h)["mean"]
-        future = {
-            id_col: np.repeat(uid, h),
-            time_col: np.asarray(future_ts),
-            target_col: np.full(h, np.nan),
-            "trend": tr_fc,
-            "frame": np.repeat("future", h),
+        future_ts = _future_index(rows[time_col].iloc[-1], h, freq)
+        data = {
+            id_col: np.repeat(uid, n + h),
+            time_col: np.concatenate([rows[time_col].to_numpy(),
+                                      np.asarray(future_ts)]),
+            target_col: np.concatenate([y, np.full(h, np.nan)]),
+            "trend": np.concatenate(
+                [dec["trend"], trend_fc.forecast(dec["trend"], h)["mean"]]),
+            "frame": np.repeat(["train", "future"], [n, h]),
         }
         for c, p in zip(seas_cols, periods):
-            s = dec["seasonals"].get(p, np.zeros(y.size))
-            train[c] = s
+            s = dec["seasonals"].get(p, np.zeros(n))
             last = s[-p:] if p <= s.size else np.zeros(p)
-            future[c] = np.tile(last, h // p + 1)[:h]
-        return pd.concat(
-            [pd.DataFrame(train), pd.DataFrame(future)], ignore_index=True
-        )[cols]
+            data[c] = np.concatenate([s, np.tile(last, h // p + 1)[:h]])
+        return data
 
-    return (
-        df.select(id_col, time_col, target_col)
-        .groupBy(id_col)
-        .applyInPandas(kernel, schema)
-    )
+    return _apply_by_series(df.select(id_col, time_col, target_col), id_col,
+                            time_col, series_fn, schema)
 
 
 def split_frames(tagged: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -165,6 +165,78 @@ def test_per_model_metrics_accumulators(spark, panel_df):
     assert eng.forecast_times_["SeasonalNaive"].value > 0
 
 
+@pytest.mark.parametrize("refit", [True, False])
+def test_cv_metrics_accumulators(spark, panel_df, refit):
+    """cross_validation registers its own counters: one fallback per
+    (series, window) for the failing model, kernel time for the other."""
+    eng = SparkForecast([SeasonalNaive(24), FailingModel()], freq="h",
+                        fallback_model=Naive())
+    eng.cross_validation(panel_df, h=4, n_windows=3, refit=refit).count()
+    n_series = panel_df.select("unique_id").distinct().count()
+    assert eng.fallback_counts_["FailingModel"].value == 3 * n_series
+    assert eng.fallback_counts_["SeasonalNaive"].value == 0
+    assert eng.forecast_times_["SeasonalNaive"].value > 0
+
+
+def test_fitted_values_metrics_accumulators(spark, panel_df):
+    eng = SparkForecast([SeasonalNaive(24), FailingModel()], freq="h",
+                        fallback_model=Naive())
+    eng.fitted_values(panel_df).count()
+    n_series = panel_df.select("unique_id").distinct().count()
+    assert eng.fallback_counts_["FailingModel"].value == n_series
+    assert eng.forecast_times_["SeasonalNaive"].value > 0
+
+
+def test_series_batch_skeleton():
+    """The per-bucket function, without Spark: series arrive interleaved
+    and out of time order, are visited once each sorted by time, a None
+    from ``series_fn`` emits nothing, and an all-None bucket is an empty
+    frame with the schema's columns."""
+    from pyspark.sql import types as T
+
+    from sparkts.engine import _series_batch
+
+    schema = T.StructType([
+        T.StructField("unique_id", T.StringType()),
+        T.StructField("ds", T.LongType()),
+        T.StructField("y", T.DoubleType()),
+        T.StructField("n_right", T.LongType()),
+    ])
+    seen = []
+
+    def series_fn(uid, rows, right=None):
+        seen.append((uid, rows["ds"].tolist()))
+        if uid == "skip":
+            return None
+        n = len(rows)
+        return {"ds": rows["ds"].to_numpy(), "y": rows["y"].to_numpy(),
+                "unique_id": np.repeat(uid, n),
+                "n_right": np.full(n, 0 if right is None else len(right))}
+
+    run = _series_batch("unique_id", "ds", series_fn, schema)
+    pdf = pd.DataFrame({"unique_id": ["a", "b", "a", "skip", "b", "a"],
+                        "ds": [3, 2, 1, 5, 1, 2],
+                        "y": [30.0, 20.0, 10.0, 0.0, 10.0, 20.0]})
+    out = run(pdf)
+    assert seen == [("a", [1, 2, 3]), ("b", [1, 2]), ("skip", [5])]
+    assert list(out.columns) == ["unique_id", "ds", "y", "n_right"]
+    assert out["unique_id"].tolist() == ["a", "a", "a", "b", "b"]
+    assert out["ds"].tolist() == [1, 2, 3, 1, 2]
+    assert out["y"].tolist() == [10.0, 20.0, 30.0, 10.0, 20.0]
+
+    empty = run(pdf[pdf.unique_id == "skip"])
+    assert list(empty.columns) == ["unique_id", "ds", "y", "n_right"]
+    assert len(empty) == 0
+
+    # cogroup: ids from either side, an empty frame for the missing side
+    seen.clear()
+    right = pd.DataFrame({"unique_id": ["c", "a", "a"], "ds": [7, 9, 8],
+                          "y": [0.0, 0.0, 0.0]})
+    out = run(pdf[pdf.unique_id == "a"], right)
+    assert seen == [("a", [1, 2, 3]), ("c", [])]
+    assert out["n_right"].tolist() == [2, 2, 2]
+
+
 def test_metrics_table_and_lineage_log(spark, panel_df, tmp_path):
     from sparkts.engine import SparkForecast
     from sparkts.kernels import FailingModel, Naive, SeasonalNaive

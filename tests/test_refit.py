@@ -183,6 +183,27 @@ class TestCvRefit:
         with pytest.raises(ValueError, match="forward"):
             eng.cross_validation(panel, h=6, n_windows=2, refit=False)
 
+    def test_fit_requires_forward_before_any_job(self, spark, panel):
+        """fit rejects a tunable model without forward at call time, as
+        cross_validation(refit=False) does — no Spark job starts."""
+        from sparkts.kernels.base import Model
+
+        class _TunedNoForward(Model):
+            tunable = True
+
+            def _forecast(self, y_, h, fitted):
+                return np.zeros(h), None, None
+
+        sc = spark.sparkContext
+        group = "fit-requires-forward"
+        sc.setJobGroup(group, "fit must reject before any job")
+        try:
+            with pytest.raises(ValueError, match="forward"):
+                SparkForecast([_TunedNoForward(), Naive()], freq="D").fit(panel)
+            assert sc.statusTracker().getJobIdsForGroup(group) == []
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
     def test_refit_false_differs_from_refit_true_for_tuned_models(
             self, spark, panel):
         """The theta/CSP silent-refit defect, regression-guarded at the

@@ -52,14 +52,14 @@ def _spark_submit() -> str | None:
     return cand if os.path.exists(cand) else None
 
 
-def _zip_package(zpath) -> None:
+def _zip_package(zpath, suffixes=(".py", ".c")) -> None:
     """The package as ``jobs/package.sh`` ships it: its ``.py`` files and
     the native kernels' ``.c`` source."""
     with zipfile.ZipFile(zpath, "w") as z:
         for root, dirs, files in os.walk(os.path.join(REPO, "sparkts")):
             dirs[:] = [d for d in dirs if d != "__pycache__"]
             for f in files:
-                if f.endswith((".py", ".c")):
+                if f.endswith(suffixes):
                     p = os.path.join(root, f)
                     z.write(p, os.path.relpath(p, REPO))
 
@@ -110,3 +110,36 @@ def test_native_kernels_load_from_zip(tmp_path):
         text=True, timeout=300, cwd=tmp_path, env=env)
     assert out.returncode == 0, out.stderr[-2000:]
     assert out.stdout.split() == ["True"]
+
+
+def test_native_fallback_warns_once(tmp_path):
+    """A zip without ``_native.c`` cannot build the native kernels: the
+    import says why in one RuntimeWarning and runs the Python kernels
+    (``LIB is None``); ``SPARKTS_NO_NATIVE`` chooses them silently."""
+    zpath = tmp_path / "sparkts.zip"
+    _zip_package(zpath, suffixes=(".py",))
+    probe = (
+        "import sys; sys.path.insert(0, sys.argv[1])\n"
+        "from sparkts.kernels import _native\n"
+        "assert _native.__file__.startswith(sys.argv[1]), _native.__file__\n"
+        "print(_native.LIB is None)\n")
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("PYTHONPATH", "SPARKTS_NO_NATIVE")}
+    env["TMPDIR"] = str(tmp_path)
+
+    def run(extra):
+        return subprocess.run(
+            [sys.executable, "-c", probe, str(zpath)], capture_output=True,
+            text=True, timeout=300, cwd=tmp_path, env={**env, **extra})
+
+    out = run({})
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split() == ["True"]
+    assert out.stderr.count("RuntimeWarning") == 1, out.stderr[-2000:]
+    assert "native kernels unavailable" in out.stderr
+    assert "_native.c" in out.stderr
+
+    quiet = run({"SPARKTS_NO_NATIVE": "1"})
+    assert quiet.returncode == 0, quiet.stderr[-2000:]
+    assert quiet.stdout.split() == ["True"]
+    assert "RuntimeWarning" not in quiet.stderr
