@@ -168,8 +168,9 @@ def _exog_kw(m: Model, X, X_future) -> dict:
 
 
 def _fit_state(m: Model, y, X):
-    return m.fit_state(y, X=X) if X is not None and m.takes_exog \
-        else m.fit_state(y)
+    if X is not None and m.takes_exog:
+        return m.fit_state(y, X=X)
+    return m.fit_state(y)
 
 
 def _require_forward(models, what: str) -> None:
