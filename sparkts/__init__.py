@@ -19,5 +19,6 @@ Layout
 
 __version__ = "0.1.0"
 
+from sparkts import _zipimport  # noqa: F401  (first: see its docstring)
 from sparkts.compat import StatsForecast  # noqa: F401
 from sparkts.engine import SparkForecast  # noqa: F401

@@ -67,7 +67,11 @@ def _kernel_parallelism(df: DataFrame) -> tuple[int, int]:
     partition ~1.7× the mean): ×2 cut the wall 5.4→4.2 s / 4.5→3.3 s
     while the 2 000-series cheap-model cv was flat (1.39 vs 1.38 s);
     ×4 helped the heavy legs more but cost the cheap cv ~20% in per-task
-    overhead, so ×2 is the default. Buckets are always 4× the partitions
+    overhead, so ×2 is the default. Most of that overhead was each task
+    re-reading pyspark.zip and the Spark jar in
+    ``importlib.invalidate_caches()``, which ``sparkts._zipimport`` now
+    skips for unchanged archives; the sizing was not re-measured after that
+    and stays ×2. Buckets are always 4× the partitions
     (8× parallelism; unchanged absolute count: the number of Python
     grouped-map calls is the number of non-empty buckets, so more
     partitions don't add boundary crossings)."""

@@ -88,6 +88,81 @@ def test_package_ships_via_spark_submit_py_files(tmp_path):
     assert res["forecast_rows"] == res["n_ids"] * 6
 
 
+_ZIP_PROBE_JOB = """
+import json
+import pandas as pd
+from pyspark.sql import SparkSession
+
+spark = SparkSession.builder.getOrCreate()
+
+
+def probe(batches):
+    import importlib
+    import sys
+    import zipimport
+
+    import sparkts  # noqa: F401
+
+    seen = []
+    stock = zipimport._read_directory
+
+    def counting(archive):
+        seen.append(archive)
+        return stock(archive)
+
+    zipimport._read_directory = counting
+    try:
+        importlib.invalidate_caches()
+        first = len(seen)
+        importlib.invalidate_caches()
+    finally:
+        zipimport._read_directory = stock
+    for _ in batches:
+        pass
+    archives = {f.archive for f in sys.path_importer_cache.values()
+                if isinstance(f, zipimport.zipimporter)}
+    yield pd.DataFrame({
+        "eager": [sys.version_info < (3, 13)],
+        "sparkts_from_zip": [sparkts.__file__.startswith(tuple(archives))],
+        "second_reads": [len(seen) - first]})
+
+
+rows = (spark.range(4).repartition(4)
+        .mapInPandas(probe, "eager boolean, sparkts_from_zip boolean, "
+                            "second_reads long")
+        .collect())
+print(json.dumps([r.asDict() for r in rows]))
+"""
+
+
+@pytest.mark.skipif(_spark_submit() is None, reason="no spark-submit")
+def test_py_files_zip_is_not_reread_per_task(tmp_path):
+    """Under ``--py-files sparkts.zip`` an executor task imports sparkts
+    from the shipped zip, and its second ``importlib.invalidate_caches()``
+    re-reads no archive, that zip included (CPython < 3.13; later versions
+    invalidate lazily by themselves)."""
+    zpath = tmp_path / "sparkts.zip"
+    _zip_package(zpath)
+    job = tmp_path / "job.py"
+    job.write_text(_ZIP_PROBE_JOB)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYSPARK_PYTHON"] = sys.executable
+    env["PYSPARK_DRIVER_PYTHON"] = sys.executable
+    out = subprocess.run(
+        [_spark_submit(), "--master", "local[2]",
+         "--py-files", str(zpath), str(job)],
+        capture_output=True, text=True, timeout=420,
+        cwd=tmp_path, env=env,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    rows = json.loads(out.stdout.strip().splitlines()[-1])
+    assert len(rows) == 4
+    for r in rows:
+        assert r["sparkts_from_zip"], rows
+        if r["eager"]:
+            assert r["second_reads"] == 0, rows
+
+
 @pytest.mark.skipif(
     not any(shutil.which(c) for c in ("cc", "gcc", "clang")),
     reason="no C compiler")
