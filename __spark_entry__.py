@@ -1281,8 +1281,9 @@ def q_seasonal_window_avg(spark, sf_dir):
 def q_ols_exog(spark, sf_dir):
     """Exogenous-regressor path end-to-end with a SQL oracle: per-series
     OLS of v_sum on n_rows over the 1h tier, predicted at three fixed
-    future regressor values (10/20/30). Exercises the cogrouped
-    applyInPandas exog zip; DuckDB checks via regr_intercept/regr_slope."""
+    future regressor values (10/20/30). Exercises the engine's exog zip
+    (panel and X_df as one side-tagged union); DuckDB checks via
+    regr_intercept/regr_slope."""
     from sparkts.kernels import LinearRegression
 
     tier = rollup_base(_t(spark, sf_dir, "events"), "ts", ["event_type"], "value", "1h")
@@ -1292,8 +1293,6 @@ def q_ols_exog(spark, sf_dir):
         F.col("v_sum").alias("y"),
         F.col("n_rows").cast("double").alias("x"),
     )
-    # fresh read for the id list — deriving it from `panel` would make the
-    # cogroup an ambiguous self-join
     ids = (_t(spark, sf_dir, "events")
            .select(F.col("event_type").alias("unique_id")).distinct())
     X_df = ids.crossJoin(

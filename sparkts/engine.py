@@ -5,31 +5,33 @@ The reference's flagship entry point is the *stateless* ``forecast`` path
 chosen for memory efficiency core.py:894-899). Every method maps onto one
 Spark shape:
 
-    panel df ──repartition(pmod(xxhash64(id), B))──▶ applyInPandas(bucket) ──▶ wide df
+    panel df ──repartition(n, id)──▶ sortWithinPartitions(id, time)
+             ──▶ mapInPandas(partition) ──▶ wide df
 
-One exchange on a hash bucket of the series key, then one Python call per
-bucket. Inside that call the per-series skeleton (``_series_batch``) groups
-the bucket's rows by id, sorts each series by time once, hands each series
-to the method's ``series_fn`` and builds one output frame for the bucket.
-Every ``series_fn`` runs its models through one model-call step
+One exchange on the series key, then one Python call per partition. Inside
+that call the per-series skeleton (``_series_stream``) streams the
+partition's Arrow batches, cuts a series wherever the id changes (the
+reference's sort-once-and-slice ``GroupedArray``, core.py:43-60), hands
+each series to the method's ``series_fn`` and builds one output frame per
+batch. Every ``series_fn`` runs its models through one model-call step
 (``_ModelStep``), which owns the timing, the fallback rule and the
-mean/lo/hi column layout. The exog paths cogroup the same buckets
-(``cogroup().applyInPandas``). The same shape
-implements ``cross_validation`` (rolling-origin backtest, reference
+mean/lo/hi column layout. The exog paths send the panel (or state) rows and
+the ``X_df`` rows through the same shape as one side-tagged union. The same
+shape implements ``cross_validation`` (rolling-origin backtest, reference
 core.py:246-383) and ``fitted_values`` (in-sample predictions, reference
 core.py:1095-1120).
 
 Scale design notes
 ------------------
-* One exchange on the series key's hash bucket; everything else is
-  kernel-local.
+* One exchange on the series key; everything else is kernel-local.
 * Fallback model semantics per reference core.py:189-204: a model that raises
   inside the kernel is replaced by the fallback's numbers under the failing
   model's column name (so schemas stay fixed); without a fallback the task
   fails loudly. Argument errors (missing regressors, wrong ``X_df`` row
   counts, missing stored state) are raised outside that rule.
 * Each series must fit in one task's memory — that is the reference's own
-  model (a series is one GroupedArray slice); 10^5-point series ≈ 1 MB.
+  model (a series is one GroupedArray slice); 10^5-point series ≈ 1 MB. A
+  worker holds one Arrow batch plus the one series still open.
 """
 
 from __future__ import annotations
@@ -42,7 +44,6 @@ from typing import Sequence
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
-from pyspark.sql.pandas.types import to_arrow_schema
 
 from sparkts.kernels.base import Model, norm_ppf, residual_sigma
 from sparkts.plans.schema import (
@@ -53,30 +54,8 @@ from sparkts.plans.schema import (
 )
 
 
-#: internal bucket column for the batched grouped-map kernels
-_BKT = "__sparkts_bkt"
-
-
-def _kernel_parallelism(df: DataFrame) -> tuple[int, int]:
-    """(n_partitions, n_buckets) for grouped-map kernels.
-
-    Scale-adaptive: partitions = 2× the cluster's parallelism — the
-    standard 2-tasks-per-core sizing, so the scheduler can back-fill
-    stragglers (guide §2.5/§2.6). r6 measurement on the heavy AutoARIMA/
-    AutoETS legs (200 long series, hash placement leaves the worst
-    partition ~1.7× the mean): ×2 cut the wall 5.4→4.2 s / 4.5→3.3 s
-    while the 2 000-series cheap-model cv was flat (1.39 vs 1.38 s);
-    ×4 helped the heavy legs more but cost the cheap cv ~20% in per-task
-    overhead, so ×2 is the default. Most of that overhead was each task
-    re-reading pyspark.zip and the Spark jar in
-    ``importlib.invalidate_caches()``, which ``sparkts._zipimport`` now
-    skips for unchanged archives; the sizing was not re-measured after that
-    and stays ×2. Buckets are always 4× the partitions
-    (8× parallelism; unchanged absolute count: the number of Python
-    grouped-map calls is the number of non-empty buckets, so more
-    partitions don't add boundary crossings)."""
-    n = df.sparkSession.sparkContext.defaultParallelism * 2
-    return n, n * 4
+#: side tag of the exog paths' union: 0 = panel or state rows, 1 = X_df rows
+_SIDE = "__sparkts_side"
 
 
 def _stack(parts: list[dict], cols: list[str]) -> dict:
@@ -86,73 +65,88 @@ def _stack(parts: list[dict], cols: list[str]) -> dict:
     return {c: np.concatenate([p[c] for p in parts]) for c in cols}
 
 
-def _series_batch(id_col: str, time_col: str, series_fn,
-                  schema: T.StructType):
-    """The per-series skeleton: the Python function of one bucket.
+def _series_stream(id_col: str, series_fn, schema: T.StructType,
+                   sides: tuple[list[str], list[str]] | None = None):
+    """The per-series skeleton: the Python function of one partition.
 
-    ``run(rows)``, or ``run(rows, right_rows)`` for a cogroup, groups each
-    frame by ``id_col``, sorts every series by ``time_col`` once and calls
-    ``series_fn(uid, rows[, right_rows])`` for every id present on either
-    side (a missing side is an empty frame). ``series_fn`` returns a dict
-    of column arrays, or None to emit nothing. The bucket's output is ONE
-    frame with the schema's columns in order — no per-series frame, no
-    concat; a bucket that emits nothing gives an empty frame typed by the
-    schema. This is the only place the engine crosses from Arrow batches to
-    series.
+    ``run(frames)`` takes frames sorted by (id[, side], time), cuts a series
+    wherever the id changes and calls ``series_fn(uid, rows)``, or with
+    ``sides`` (the exog union's left and right columns) ``series_fn(uid,
+    left_rows, right_rows)``, a missing side being an empty frame. A frame's
+    last series is carried into the next frame until it closes.
+    ``series_fn`` returns a dict of column arrays, or None to emit nothing.
+    Each input frame, and the partition's end, gives ONE output frame with
+    the schema's columns (empty if nothing closed). This is the only place
+    the engine crosses from Arrow batches to series.
     """
     cols = schema.names
 
-    def run(*frames: pd.DataFrame) -> pd.DataFrame:
-        groups = [{uid: g.sort_values(time_col)
-                   for uid, g in f.groupby(id_col, sort=False)}
-                  for f in frames]
-        empty = [f.iloc[:0] for f in frames]
-        parts = []
-        for uid in dict.fromkeys(u for g in groups for u in g):
-            out = series_fn(uid, *(g.get(uid, e)
-                                   for g, e in zip(groups, empty)))
-            if out is not None:
-                parts.append(out)
-        if not parts:
-            return to_arrow_schema(schema).empty_table().to_pandas()
-        return pd.DataFrame(_stack(parts, cols), columns=cols)
+    def call(pieces: list[pd.DataFrame]):
+        rows = pieces[0] if len(pieces) == 1 else pd.concat(pieces)
+        uid = rows[id_col].iat[0]
+        if sides is None:
+            return series_fn(uid, rows)
+        k = int(np.searchsorted(rows[_SIDE].to_numpy(), 1))
+        return series_fn(uid, rows.iloc[:k][sides[0]],
+                         rows.iloc[k:][sides[1]])
+
+    def frame(outs: list) -> pd.DataFrame:
+        parts = [o for o in outs if o is not None]
+        return pd.DataFrame(_stack(parts, cols) if parts else {},
+                            columns=cols)
+
+    def run(frames):
+        carry: list[pd.DataFrame] = []  # pieces of the series still open
+        for pdf in frames:
+            if pdf.empty:
+                continue
+            ids = pdf[id_col].to_numpy()
+            cuts = [0, *(np.flatnonzero(ids[1:] != ids[:-1]) + 1), ids.size]
+            outs = []
+            for lo, hi in zip(cuts[:-1], cuts[1:]):
+                if carry and ids[lo] != carry[0][id_col].iat[0]:
+                    outs.append(call(carry))
+                    carry = []
+                carry.append(pdf.iloc[lo:hi])
+            yield frame(outs)
+        if carry:
+            yield frame([call(carry)])
 
     return run
 
 
 def _apply_by_series(df: DataFrame, id_col: str, time_col: str, series_fn,
-                     schema: T.StructType,
-                     right: DataFrame | None = None) -> DataFrame:
-    """Grouped-map kernel over series, batched by hash bucket (r6).
-
-    Shape: one exchange on ``pmod(xxhash64(id), B)``, then ONE Arrow
-    grouped-map call per *bucket* that runs ``_series_batch`` over the
-    series inside (guide §4.1 — fewer, larger batches across the Python
-    boundary). Measured rationale: per-GROUP applyInPandas overhead is
-    ~0.5 ms, so at 2000 series a one-call-per-series shape spent ~1 s of
-    cv9's 1.3 s wall on boundary overhead — 4× the model compute.
-    With ``right`` (the exog paths) both sides are bucketed with the SAME
-    hash and bucket count (co-partitioned, one shuffle each side) and
-    cogrouped; ``series_fn(uid, left_rows, right_rows)`` then sees every
-    id present on either side — the cogroup-on-id contract the per-series
-    validation errors rely on.
+                     schema: T.StructType, right: DataFrame | None = None,
+                     ordered: bool = False) -> DataFrame:
+    """The engine's one Spark shape: ``repartition(n, id)``,
+    ``sortWithinPartitions(id[, side], time)``, then one ``mapInPandas``
+    call per partition through ``_series_stream`` (the reference's
+    sort-once-and-slice ``GroupedArray``, core.py:43-60). With ``right``
+    (the exog paths) both sides go through that exchange as one
+    ``unionByName``, tagged 0/1 by side. ``ordered`` range-partitions the
+    ids so the partitions come out in id order. Null ids are no series.
 
     Why an explicit repartition: AQE coalesces shuffle partitions by JVM
     byte size, and a panel small in bytes coalesces to ONE partition —
     serializing every kernel call on one worker. AQE leaves user
-    repartitioning alone, and the groupBy reuses it (no second exchange —
-    asserted in tests/test_plans.py)."""
-    n, b = _kernel_parallelism(df)
-    run = _series_batch(id_col, time_col, series_fn, schema)
-
-    def bucketed(d: DataFrame):
-        return (d.withColumn(_BKT, F.pmod(F.xxhash64(id_col), F.lit(b)))
-                .repartition(n, _BKT).groupBy(_BKT))
-
-    if right is None:
-        return bucketed(df).applyInPandas(lambda pdf: run(pdf), schema)
-    return (bucketed(df).cogroup(bucketed(right))
-            .applyInPandas(lambda lpdf, rpdf: run(lpdf, rpdf), schema))
+    repartitioning alone (one exchange — asserted in tests/test_plans.py)."""
+    sides = None
+    keys = [id_col, F.col(time_col).asc_nulls_last()]
+    if right is not None:
+        sides = (df.columns, right.columns)
+        df = df.withColumn(_SIDE, F.lit(0)).unionByName(
+            right.withColumn(_SIDE, F.lit(1)), allowMissingColumns=True)
+        keys.insert(1, _SIDE)
+    # 2 tasks per core, so the scheduler can back-fill stragglers. r6, on
+    # the heavy AutoARIMA/AutoETS legs (200 long series): ×2 cut the wall
+    # 5.4→4.2 s / 4.5→3.3 s with the 2,000-series cheap-model cv flat; ×4
+    # helped the heavy legs more but cost the cheap cv ~20% per-task overhead
+    n = 2 * df.sparkSession.sparkContext.defaultParallelism
+    df = df.where(F.col(id_col).isNotNull())
+    df = df.repartitionByRange(n, id_col) if ordered else df.repartition(
+        n, id_col)
+    return df.sortWithinPartitions(*keys).mapInPandas(
+        _series_stream(id_col, series_fn, schema, sides), schema)
 
 
 def _future_index(last, h: int, freq):
@@ -367,10 +361,10 @@ class SparkForecast:
         Exogenous regressors: every df column beyond id/time/target is exog
         (reference core.py:630); models with ``uses_exog`` additionally need
         ``X_df`` = (id, ds, exog...) with exactly h future rows per id
-        (reference core.py:737-751). The exog path is a co-grouped kernel —
-        Spark's ``cogroup().applyInPandas``, the same shape as the
-        reference's Fugue zip (fugue.py:25-51 _cotransform): one shuffle on
-        each side, zero joins.
+        (reference core.py:737-751). The exog path zips the two frames like
+        the reference's Fugue zip (fugue.py:25-51 _cotransform): both go
+        through the engine's one exchange as a side-tagged union, with no
+        join.
         """
         models, freq = self.models, self.freq
         schema = forecast_schema(
@@ -697,10 +691,14 @@ class SparkForecast:
         (reference validation core.py:1188-1200) — at plan time, not in
         the workers.
 
-        ``sort=True`` adds the reference's presentation sort
-        [id, cutoff, ds] (core.py:1246-1257) — one extra full shuffle of the
-        cv output. Pass ``sort=False`` at scale when downstream doesn't
-        need global order.
+        ``sort=True`` gives the reference's presentation order
+        [id, cutoff, ds] (core.py:1246-1257) without sorting the cv output:
+        the series ids are range-partitioned instead of hashed, and each
+        partition already comes out in that order, so every model runs once
+        and no second shuffle follows. Spark's range partitioner samples the
+        input's ids first, one extra pass over the input (not the models).
+        Pass ``sort=False`` at scale when downstream doesn't need global
+        order.
 
         The whole backtest loop runs inside one kernel call per series
         (reference-shaped "Option A"): state stays local.
@@ -764,10 +762,9 @@ class SparkForecast:
                 blocks.append(block)
             return _stack(blocks, cols)
 
-        out = _apply_by_series(
+        return _apply_by_series(
             df.select(id_col, time_col, target_col, *keep_exog), id_col,
-            time_col, series_fn, schema)
-        return out.orderBy(id_col, "cutoff", time_col) if sort else out
+            time_col, series_fn, schema, ordered=sort)
 
     # ------------------------------------------------------------------ #
     def cross_validation_fitted_values(

@@ -9,8 +9,8 @@ predictions), and per confidence level ``lo-{l}`` / ``hi-{l}`` h-vectors.
 reference's column-naming scheme (models.py:185-186, core.py:126-130).
 
 These kernels are plain numpy over a single series, never per-row. The
-engine calls them from one ``applyInPandas`` call per hash bucket of series
-(``engine._series_batch``), one series at a time.
+engine calls them from one ``mapInPandas`` call per id-sorted partition
+(``engine._series_stream``), one series at a time.
 
 No scipy in this environment: the gaussian quantile uses Acklam's rational
 approximation of the inverse normal CDF (|rel err| < 1.15e-9), which is more

@@ -6,7 +6,7 @@ partial-season NaN alignment), HistoricAverage (models.py:3208-3217),
 RandomWalkWithDrift (models.py:3677-3693), WindowAverage (models.py:4562-4574),
 SeasonalWindowAverage (models.py:4705-4719). Interval (sigmah) formulas per
 model follow the reference (cited per class). All pure numpy; every model is
-exercised per-series inside ``applyInPandas``.
+exercised per-series inside the engine's ``mapInPandas`` kernel.
 """
 
 from __future__ import annotations

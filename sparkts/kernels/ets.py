@@ -17,7 +17,7 @@ source:
 * model selection by AICc with np = #params + #free states + 1(σ²);
 * forecast variance classes 1/2/3 for interval widths (Hyndman 2008 ch. 6).
 
-Everything is numpy per series inside ``applyInPandas`` — the state loop is
+Everything is numpy per series inside ``mapInPandas`` — the state loop is
 O(n) Python over scalars, acceptable for downsampled-tier series (the 100 TB
 design downsamples BEFORE model fitting, so kernels see 10²–10⁴ points,
 never raw events).

@@ -6,10 +6,10 @@ FUTURE frame (h rows per id) whose trend column is the trend sub-forecaster's
 prediction and whose seasonal columns tile the last cycle.
 
 Spark shape: the engine's per-series skeleton (``engine._apply_by_series``:
-hash buckets of series, one ``applyInPandas`` call per bucket) emits both
-frames of each series as a tagged union (``frame`` ∈ {'train','future'}) so
-the decomposition runs exactly once; ``split_frames`` persists and filters.
-One shuffle total.
+id-partitioned, id/time-sorted partitions through one ``mapInPandas``)
+emits both frames of each series as a tagged union (``frame`` ∈
+{'train','future'}) so the decomposition runs exactly once;
+``split_frames`` persists and filters. One shuffle total.
 """
 
 from __future__ import annotations

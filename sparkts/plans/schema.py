@@ -1,6 +1,6 @@
 """Plan-time output-schema derivation.
 
-``applyInPandas`` needs the output StructType *before* execution, so the
+``mapInPandas`` needs the output StructType *before* execution, so the
 schema is computed eagerly from (models, levels) — the same pattern the
 reference uses for its distributed path (reference fugue.py:238-269
 ``_get_output_schema``). Column naming matches the reference convention:

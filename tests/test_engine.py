@@ -187,14 +187,82 @@ def test_fitted_values_metrics_accumulators(spark, panel_df):
     assert eng.forecast_times_["SeasonalNaive"].value > 0
 
 
+def test_cv_sort_runs_each_model_once(spark, panel, tmp_path):
+    """sort=True gives the [id, cutoff, ds] order and runs each model once
+    per (series, window) under non-aggregating actions too: a sort after
+    the kernel would re-run the kernel to sample its range bounds."""
+    from pyspark.sql import functions as F
+
+    ten = panel.where(F.col("unique_id").isin(
+        [f"series_{i}" for i in range(10)]))
+    eng = SparkForecast([Naive(), FailingModel()], freq="D",
+                        fallback_model=Naive())
+    pdf = eng.cross_validation(ten, h=3, n_windows=2).toPandas()
+    assert eng.fallback_counts_["FailingModel"].value == 20
+    keys = list(zip(pdf["unique_id"], pdf["cutoff"], pdf["ds"]))
+    assert len(keys) == 60 and keys == sorted(keys)
+    eng.cross_validation(ten, h=3, n_windows=2).write.parquet(
+        str(tmp_path / "cv"))
+    assert eng.fallback_counts_["FailingModel"].value == 20
+
+
+def test_series_straddle_arrow_batches(spark, panel):
+    """With 7-row Arrow batches every series spans several batches (the
+    carry between batches); each method path then gives exactly the output
+    it gives at the session's default batch size."""
+    from sparkts.kernels import ARIMA, LinearRegression
+
+    rng = np.random.default_rng(3)
+    rows, future = [], []
+    for i in range(6):
+        n = 20 + 3 * i
+        x = rng.normal(0, 1, n + 3)
+        y = 4 + i + 2 * x + rng.normal(0, 0.1, n + 3)
+        rows += [(f"x{i}", t, float(y[t]), float(x[t])) for t in range(n)]
+        future += [(f"x{i}", t, float(x[t])) for t in range(n, n + 3)]
+    ex = spark.createDataFrame(rows, "unique_id string, ds long, y double, "
+                                     "x double")
+    X_df = spark.createDataFrame(future, "unique_id string, ds long, "
+                                         "x double")
+    eng = SparkForecast([Naive(), SeasonalNaive(7), FailingModel()],
+                        freq="D", fallback_model=Naive())
+    xeng = SparkForecast([LinearRegression(), ARIMA((1, 0, 0)), Naive()],
+                         freq=1)
+    paths = {
+        "forecast": lambda: eng.forecast(panel, h=5, level=[90]),
+        "forecast_exog": lambda: xeng.forecast(ex, h=3, X_df=X_df),
+        "predict_exog": lambda: xeng.predict(xeng.fit(ex), h=3, level=[80],
+                                             X_df=X_df),
+        "cross_validation": lambda: eng.cross_validation(
+            panel, h=4, n_windows=2, step_size=3, level=[90]),
+    }
+
+    def run_all():
+        return {k: f().toPandas().sort_values(["unique_id", "ds"] + (
+            ["cutoff"] if k == "cross_validation" else []))
+            .reset_index(drop=True) for k, f in paths.items()}
+
+    want = run_all()
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    spark.conf.set(conf, "7")
+    try:
+        got = run_all()
+    finally:
+        spark.conf.unset(conf)
+    for k in paths:
+        assert len(want[k]) > 0, k
+        pd.testing.assert_frame_equal(got[k], want[k], check_exact=True)
+
+
 def test_series_batch_skeleton():
-    """The per-bucket function, without Spark: series arrive interleaved
-    and out of time order, are visited once each sorted by time, a None
-    from ``series_fn`` emits nothing, and an all-None bucket is an empty
-    frame with the schema's columns."""
+    """The per-partition function, without Spark: frames sorted by id then
+    time are cut into series, a series split across two frames is called
+    once with all its rows (the carry), a None from ``series_fn`` emits
+    nothing, every input frame gives one output frame, and a frame in
+    which nothing is emitted still has the schema's columns."""
     from pyspark.sql import types as T
 
-    from sparkts.engine import _series_batch
+    from sparkts.engine import _SIDE, _series_stream
 
     schema = T.StructType([
         T.StructField("unique_id", T.StringType()),
@@ -202,10 +270,12 @@ def test_series_batch_skeleton():
         T.StructField("y", T.DoubleType()),
         T.StructField("n_right", T.LongType()),
     ])
+    cols = ["unique_id", "ds", "y", "n_right"]
     seen = []
 
     def series_fn(uid, rows, right=None):
-        seen.append((uid, rows["ds"].tolist()))
+        seen.append((uid, rows["ds"].tolist(),
+                     None if right is None else right["ds"].tolist()))
         if uid == "skip":
             return None
         n = len(rows)
@@ -213,28 +283,49 @@ def test_series_batch_skeleton():
                 "unique_id": np.repeat(uid, n),
                 "n_right": np.full(n, 0 if right is None else len(right))}
 
-    run = _series_batch("unique_id", "ds", series_fn, schema)
-    pdf = pd.DataFrame({"unique_id": ["a", "b", "a", "skip", "b", "a"],
-                        "ds": [3, 2, 1, 5, 1, 2],
-                        "y": [30.0, 20.0, 10.0, 0.0, 10.0, 20.0]})
-    out = run(pdf)
-    assert seen == [("a", [1, 2, 3]), ("b", [1, 2]), ("skip", [5])]
-    assert list(out.columns) == ["unique_id", "ds", "y", "n_right"]
-    assert out["unique_id"].tolist() == ["a", "a", "a", "b", "b"]
-    assert out["ds"].tolist() == [1, 2, 3, 1, 2]
-    assert out["y"].tolist() == [10.0, 20.0, 30.0, 10.0, 20.0]
+    run = _series_stream("unique_id", series_fn, schema)
+    pdf = pd.DataFrame({"unique_id": ["a", "a", "b", "b", "b", "skip"],
+                        "ds": [1, 2, 1, 2, 3, 5],
+                        "y": [10.0, 20.0, 10.0, 20.0, 30.0, 0.0]})
+    # "b" straddles the two frames; "skip" ends the partition
+    outs = list(run([pdf.iloc[:3], pdf.iloc[3:]]))
+    assert seen == [("a", [1, 2], None), ("b", [1, 2, 3], None),
+                    ("skip", [5], None)]
+    assert len(outs) == 3  # one per input frame, one at the end
+    assert all(list(o.columns) == cols for o in outs)
+    out = pd.concat([o for o in outs if len(o)], ignore_index=True)
+    assert out["unique_id"].tolist() == ["a", "a", "b", "b", "b"]
+    assert out["ds"].tolist() == [1, 2, 1, 2, 3]
+    assert out["y"].tolist() == [10.0, 20.0, 10.0, 20.0, 30.0]
 
-    empty = run(pdf[pdf.unique_id == "skip"])
-    assert list(empty.columns) == ["unique_id", "ds", "y", "n_right"]
-    assert len(empty) == 0
+    # nothing emitted: empty frames with the schema's columns
+    outs = list(run([pdf[pdf.unique_id == "skip"]]))
+    assert [list(o.columns) for o in outs] == [cols, cols]
+    assert [len(o) for o in outs] == [0, 0]
 
-    # cogroup: ids from either side, an empty frame for the missing side
+    # exog union, sorted by (id, side, ds): ids from either side, an
+    # empty frame with that side's columns for the missing side
     seen.clear()
-    right = pd.DataFrame({"unique_id": ["c", "a", "a"], "ds": [7, 9, 8],
-                          "y": [0.0, 0.0, 0.0]})
-    out = run(pdf[pdf.unique_id == "a"], right)
-    assert seen == [("a", [1, 2, 3]), ("c", [])]
-    assert out["n_right"].tolist() == [2, 2, 2]
+    left = pdf[pdf.unique_id != "skip"].assign(**{_SIDE: 0})
+    right = pd.DataFrame({"unique_id": ["a", "a", "c"], "ds": [8, 9, 7],
+                          "x": [0.5, 0.6, 0.7], _SIDE: 1})
+    union = pd.concat([left, right]).sort_values(
+        ["unique_id", _SIDE, "ds"], kind="stable")
+    sides = (["unique_id", "ds", "y"], ["unique_id", "ds", "x"])
+    got = {}
+
+    def side_fn(uid, rows, right):
+        got[uid] = (list(rows.columns), list(right.columns))
+        return series_fn(uid, rows, right)
+
+    run = _series_stream("unique_id", side_fn, schema, sides)
+    # "a" straddles the frames between its left and right rows
+    outs = run([union.iloc[:3], union.iloc[3:]])
+    out = pd.concat([o for o in outs if len(o)], ignore_index=True)
+    assert seen == [("a", [1, 2], [8, 9]), ("b", [1, 2, 3], []),
+                    ("c", [], [7])]
+    assert got == {u: tuple(sides) for u in "abc"}
+    assert out["n_right"].tolist() == [2, 2, 0, 0, 0]
 
 
 def test_metrics_table_and_lineage_log(spark, panel_df, tmp_path):

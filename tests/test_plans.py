@@ -91,7 +91,7 @@ class TestEnginePlan:
         )
         fc = SparkForecast([SeasonalNaive(24), Naive()], freq="h").forecast(panel, h=4)
         p = plan_of(fc)
-        assert "FlatMapGroupsInPandas" in p  # Arrow grouped-map kernel
+        assert "MapInPandas" in p  # one Arrow map over id-sorted partitions
         assert n_exchanges(p) == 2  # rollup shuffle + id partition, no more
 
 
